@@ -18,12 +18,16 @@ import org.apache.spark.sql.functions._
   *
   * Spark-first: a "mode" is WHICH PLAN acceptance builds, decided once
   * per batch at plan time — not per-row branching. Consistent gates the
-  * batch at the group-resolved frontier (broadcast one-row scalar) and
-  * reduces; best-effort reduces everything and marks what lies beyond
-  * the frontier as speculative (idempotent re-apply after a restart);
-  * immediate doesn't consult the checkpoint at all. The only driver-side
-  * value is the control-plane lag (one row), mirroring the reference
-  * reading its checkpoint table.
+  * batch at the group-resolved frontier and reduces; best-effort reduces
+  * everything and marks what lies beyond the frontier as speculative
+  * (idempotent re-apply after a restart); immediate doesn't consult the
+  * checkpoint at all. Outside immediate mode the group-resolved frontier
+  * is a SNAPSHOT: one row read from the proposal log once per bootstrap
+  * or refresh (the reference reading its checkpoint table), which both
+  * the mode decision and the acceptance gate then see. Acceptance reads
+  * that row as a one-row local relation, so no action on the accepted
+  * frame re-runs the frontier aggregate, and a proposal log that grows
+  * after the read cannot move the gate away from the mode it chose.
   */
 object Conveyor {
 
@@ -54,9 +58,11 @@ object Conveyor {
     else if (lagUs <= cfg.bestEffortWindowUs / 4) Consistent
     else current.getOrElse(BestEffort) // hysteresis band: keep course
 
-  /** One conveyor per target schema: the selected mode, the bootstrapped
-    * per-partition checkpoint frontier, and the one-row group-resolved
-    * scalar. Acceptance dispatches on the mode.
+  /** One conveyor per target schema: the selected mode, the per-partition
+    * checkpoint frontier (lazy, never read by acceptance), and the
+    * group-resolved frontier acceptance gates on — a one-row local
+    * relation holding the snapshot read at bootstrap (lazy and unread in
+    * immediate mode). Acceptance dispatches on the mode.
     */
   final case class Conveyor(schema: String, mode: Mode,
       frontier: DataFrame, resolved: DataFrame) {
@@ -96,35 +102,40 @@ object Conveyor {
 
   /** The per-schema conveyor cache (reference `Conveyors.Get`,
     * `conveyor.go:59`): get-or-create bootstraps the checkpoint
-    * frontier from the proposal log, reads the control-plane lag (one
-    * row — only when the config is in the dynamic regime), and selects
-    * the initial mode.
+    * frontier from the proposal log, reads the group-resolved row once
+    * (outside immediate mode), and selects the initial mode.
     */
   final class Conveyors(cfg: Config) {
     private val cache =
       scala.collection.concurrent.TrieMap.empty[String, Conveyor]
 
-    /** Shared bootstrap: frontier + group-resolved scalar from the
-      * proposal log, control-plane lag read (one row, like the
-      * reference's checkpoint-table query — never a data-plane
-      * collect; only in the dynamic regime), mode selection against
-      * `current`.
+    /** Shared bootstrap: the frontier from the proposal log, then —
+      * outside immediate mode — ONE read of the group-resolved row (the
+      * reference's checkpoint-table query; a one-row control-plane read,
+      * never a data-plane collect). That row sets the lag for mode
+      * selection against `current` and becomes the local relation
+      * acceptance gates on.
       */
     private def bootstrap(schema: String, proposals: DataFrame,
         partition: Column, nanos: Column, arrival: Column, nowUs: => Long,
         current: Option[Mode]): Conveyor = {
       val frontier = Checkpoint.advance(proposals, partition, nanos, arrival)
       val resolved = Checkpoint.groupResolved(frontier)
-      val dynamic = !cfg.immediate && !cfg.bestEffortOnly &&
-        cfg.bestEffortWindowUs > 0L
-      val lagUs =
-        if (!dynamic) 0L
-        else {
-          val row = resolved.collect()(0)
-          if (row.isNullAt(0)) Long.MaxValue // empty checkpoint: way behind
+      if (cfg.immediate) Conveyor(schema, Immediate, frontier, resolved)
+      else {
+        val row = resolved.collect()(0)
+        val dynamic = !cfg.bestEffortOnly && cfg.bestEffortWindowUs > 0L
+        val lagUs =
+          if (!dynamic) 0L
+          else if (row.isNullAt(0)) Long.MaxValue // empty checkpoint: way behind
           else nowUs - row.getLong(0) / 1000L
-        }
-      Conveyor(schema, selectMode(cfg, lagUs, current), frontier, resolved)
+        // a local relation, not a per-trigger literal: the value stays
+        // out of generated code, so each new frontier reuses the
+        // compiled plan
+        val snapshot = proposals.sparkSession.createDataFrame(
+          java.util.List.of(row), resolved.schema)
+        Conveyor(schema, selectMode(cfg, lagUs, current), frontier, snapshot)
+      }
     }
 
     // getOrElseUpdate may evaluate the thunk more than once under a

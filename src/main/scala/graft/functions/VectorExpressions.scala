@@ -450,6 +450,19 @@ object GraftFunctions {
       exprs(0), exprs(1))
   }
 
+  /** `DESCRIBE FUNCTION` text for the quantized-array kernels, which
+    * reject arrays whose element type is nullable (arrays read from
+    * Parquet usually are) and so carry the fix in their usage.
+    */
+  private def quantizedInfo(cls: Class[_], name: String, what: String) =
+    new ExpressionInfo(cls.getName, null, name,
+      s"_FUNC_(a, b) - Returns the $what of two equal-length array<bigint> " +
+        "arguments. Array elements must be non-null: an argument whose element type " +
+        "is nullable fails analysis. Coalesce the elements where the array is built, " +
+        "e.g. _FUNC_(transform(a, x -> coalesce(x, 0L)), transform(b, x -> coalesce(x, 0L))); " +
+        "arrays of unequal length raise an error.",
+      "", "", "", "", "", "", "built-in")
+
   def register(spark: SparkSession): Unit = {
     // idempotent: re-registering per query spams "replaced a previously
     // registered function" warnings into the bench/verify output
@@ -465,9 +478,12 @@ object GraftFunctions {
     if (!reg.functionExists(FunctionIdentifier("graft_might_contain")))
       reg.createOrReplaceTempFunction("graft_might_contain", mightContainBuilder, "built-in")
     if (!reg.functionExists(FunctionIdentifier("graft_dot_q")))
-      reg.createOrReplaceTempFunction("graft_dot_q", dotQBuilder, "built-in")
+      reg.registerFunction(FunctionIdentifier("graft_dot_q"),
+        quantizedInfo(classOf[DotQ], "graft_dot_q", "exact integer dot product"), dotQBuilder)
     if (!reg.functionExists(FunctionIdentifier("graft_dist2_q")))
-      reg.createOrReplaceTempFunction("graft_dist2_q", dist2QBuilder, "built-in")
+      reg.registerFunction(FunctionIdentifier("graft_dist2_q"),
+        quantizedInfo(classOf[Dist2Q], "graft_dist2_q", "exact integer squared L2 distance"),
+        dist2QBuilder)
   }
 }
 

@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, ReportsSourceMetrics, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -38,9 +38,15 @@ import org.apache.spark.util.SerializableConfiguration
   *    1000 objects concurrently; no driver-side line parsing.
   *  - The offset is O(1) state (one file name), not a growing file set;
   *    Spark's checkpoint log stores one tiny JSON per batch.
-  *  - Listing cost is one directory scan per trigger; admission control
-  *    caps each micro-batch so a month-long backlog drains in bounded
-  *    memory instead of one giant batch.
+  *  - Listing cost is one bucket walk per trigger, one `listStatus` per
+  *    directory, reading only name and length per object: no
+  *    per-object metadata lookups (owner, permission, block
+  *    locations). Admission control caps each micro-batch so a
+  *    month-long backlog drains in bounded memory instead of one giant
+  *    batch.
+  *  - The stream reports its backlog (`pendingFiles`) and the newest
+  *    `.RESOLVED` marker (`latestResolvedMarker`) in every
+  *    `StreamingQueryProgress`, from the trigger's cached listing.
   *  - Column pruning is pushed into the JSON decode: a query that only
   *    reads `updated` never materializes `after` payload strings.
   */
@@ -198,7 +204,8 @@ object ChangefeedOffset {
 
 class ChangefeedMicroBatchStream(readSchema: StructType, dir: String, maxFilesPerTrigger: Int,
     bounds: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
-    extends MicroBatchStream with SupportsAdmissionControl with SupportsTriggerAvailableNow {
+    extends MicroBatchStream with SupportsAdmissionControl with SupportsTriggerAvailableNow
+    with ReportsSourceMetrics {
 
   // Trigger.AvailableNow: snapshot the listing once, then drain exactly
   // that snapshot under the usual read limits (late-arriving files go to
@@ -291,6 +298,28 @@ class ChangefeedMicroBatchStream(readSchema: StructType, dir: String, maxFilesPe
     val (data, markers) = currentClassified(refresh = false)
     ChangefeedFiles.pruneByUpdated(data.filter(f => f > lo && f <= hi), markers, bounds)
       .map(f => ChangefeedFilePartition(f): InputPartition)
+  }
+
+  /** Backlog and resolved frontier for `StreamingQueryProgress`: visible
+    * data files beyond the consumed offset, and the newest `.RESOLVED`
+    * marker. Read from this trigger's cached listing (or the
+    * AvailableNow snapshot); before the first listing there is nothing
+    * to report, and no listing is made for it.
+    */
+  override def metrics(latestConsumedOffset: java.util.Optional[Offset])
+      : java.util.Map[String, String] = {
+    val listing = availableNowSnapshot.getOrElse(lastListing)
+    if (listing == null) java.util.Map.of()
+    else {
+      val (data, markers) = listing
+      val consumed = latestConsumedOffset.map[String] {
+        case o: ChangefeedOffset => o.lastFile
+        case o => ChangefeedOffset.fromJson(o.json()).lastFile // a serialized offset
+      }.orElse("")
+      java.util.Map.of(
+        "pendingFiles", data.count(_ > consumed).toString,
+        "latestResolvedMarker", markers.lastOption.getOrElse(""))
+    }
   }
 
   private lazy val conf = ChangefeedFiles.confBroadcast()
@@ -422,32 +451,35 @@ object ChangefeedFiles {
     val fs = p0.getFileSystem(spark.sessionState.newHadoopConf())
     val data = Array.newBuilder[(String, Long)]
     val markers = Array.newBuilder[String]
-    def add(full: String, rel: String, len: Long): Unit = {
-      val hidden = rel.split('/')
-        .exists(seg => seg.startsWith("_") || seg.startsWith("."))
-      if (!hidden) { if (isResolvedMarker(full)) markers += full else data += ((full, len)) }
-    }
-    def walk(root: Path): Unit = {
-      val rootQ = fs.makeQualified(root)
-      val prefix = rootQ.toString + "/"
-      val it = fs.listFiles(rootQ, true)
-      while (it.hasNext) {
-        val s: FileStatus = it.next()
-        if (s.isFile && s.getLen > 0) {
-          val full = s.getPath.toString
-          add(full, if (full.startsWith(prefix)) full.substring(prefix.length) else full,
-            s.getLen)
-        }
+    def hidden(seg: String): Boolean = seg.startsWith("_") || seg.startsWith(".")
+    def add(full: String, rel: String, len: Long): Unit =
+      if (!rel.split('/').exists(hidden)) {
+        if (isResolvedMarker(full)) markers += full else data += ((full, len))
       }
-    }
+    // listStatus per directory reads each entry's name, length and type
+    // only. Hadoop's located listFiles walk also copies every object's
+    // owner and permission, which on a local FS without native Hadoop
+    // forks a shell per object. A hidden directory is never descended:
+    // every path below it has a hidden segment.
+    def walk(dir: Path, rel: String): Unit =
+      fs.listStatus(dir).foreach { s =>
+        val name = s.getPath.getName
+        val r = if (rel.isEmpty) name else s"$rel/$name"
+        if (s.isDirectory) { if (!hidden(name)) walk(s.getPath, r) }
+        else if (s.isFile && s.getLen > 0) add(s.getPath.toString, r, s.getLen)
+      }
     if (dir.exists(c => "{}[]*?".contains(c))) {
       Option(fs.globStatus(p0)).getOrElse(Array.empty[FileStatus]).foreach { st =>
         if (st.isFile && st.getLen > 0) add(st.getPath.toString, st.getPath.getName, st.getLen)
-        else if (st.isDirectory) walk(st.getPath)
+        else if (st.isDirectory) walk(st.getPath, "")
       }
     } else {
-      if (!fs.exists(p0)) return (Array.empty, Array.empty)
-      walk(p0)
+      val st = try fs.getFileStatus(fs.makeQualified(p0)) catch {
+        case _: java.io.FileNotFoundException => return (Array.empty, Array.empty)
+      }
+      // a file path is its own listing, checked along its full path
+      if (st.isDirectory) walk(st.getPath, "")
+      else if (st.isFile && st.getLen > 0) add(st.getPath.toString, st.getPath.toString, st.getLen)
     }
     (data.result().sortBy(_._1), markers.result().sorted)
   }

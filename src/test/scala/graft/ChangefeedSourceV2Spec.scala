@@ -179,6 +179,91 @@ class ChangefeedSourceV2Spec extends SparkSpec {
     assert(spark.table("dsv2_nested").count() == 3)
   }
 
+  test("the listStatus walk lists exactly what Hadoop's listFiles lists") {
+    import org.apache.hadoop.fs.Path
+    val base = Files.createTempDirectory("graft_dsv2_listing").toString
+    def put(rel: String, body: String): Unit = {
+      val p = java.nio.file.Paths.get(s"$base/$rel")
+      Files.createDirectories(p.getParent)
+      Files.write(p, body.getBytes("UTF-8"))
+    }
+    val row = """{"after": "x", "key": "[1]", "updated": "1.0000000000"}""" + "\n"
+    val marker = """{"resolved": "2.0000000000"}"""
+    put("2026-01-01/000001-a.ndjson", row)
+    put("2026-01-01/000002-b.ndjson", row * 3)
+    put("2026-01-01/000003.RESOLVED", marker)
+    put("2026-01-01/.tmp-000004-c.ndjson", row) // partial, renamed into place later
+    put("2026-01-01/000005-empty.ndjson", "")
+    put("2026-01-02/00/000006-d.ndjson", row * 2)
+    put("2026-01-02/_staging/000007-e.ndjson", row)
+    put("2026-01-02/.hidden/000008.RESOLVED", marker)
+    put("2026-01-02/000009.RESOLVED", marker)
+    put("2026-01-02/000010-f.ndjson", row) // beyond the last marker: listed, not visible
+    put("2026-01-03/000011.RESOLVED", "")
+    put("_spark_metadata/0", row)
+    put(".dot/000012-g.ndjson", row)
+    put("_SUCCESS", row)
+    Files.createDirectories(java.nio.file.Paths.get(s"$base/2026-01-04"))
+
+    // the reference: Hadoop's located recursive listing, under the same
+    // visibility rules (hidden `_`/`.` segments below the root, no
+    // zero-length objects, markers apart, full-path order)
+    def viaListFiles(root: String): (Seq[(String, Long)], Seq[String]) = {
+      val p = new Path(root)
+      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+      val q = fs.makeQualified(p)
+      val it = fs.listFiles(q, true)
+      val all = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+      while (it.hasNext) {
+        val st = it.next()
+        if (st.isFile && st.getLen > 0) all += ((st.getPath.toString, st.getLen))
+      }
+      val visible = all.filterNot { case (f, _) =>
+        f.stripPrefix(q.toString + "/").split('/')
+          .exists(seg => seg.startsWith("_") || seg.startsWith("."))
+      }
+      val (markers, data) = visible.partition(_._1.endsWith(".RESOLVED"))
+      (data.sortBy(_._1).toSeq, markers.map(_._1).sorted.toSeq)
+    }
+    def listed(root: String): (Seq[(String, Long)], Seq[String]) = {
+      val (data, markers) = graft.sources.ChangefeedFiles.listClassifiedSized(root)
+      (data.toSeq, markers.toSeq)
+    }
+
+    val (data, markers) = listed(base)
+    assert(data.map(_._1.split('/').last) == Seq("000001-a.ndjson", "000002-b.ndjson",
+      "000006-d.ndjson", "000010-f.ndjson"))
+    assert(data.map(_._2) == Seq(row.length, 3 * row.length, 2 * row.length, row.length)
+      .map(_.toLong))
+    assert(markers.map(_.split('/').last) == Seq("000003.RESOLVED", "000009.RESOLVED"))
+    for (root <- Seq(base, s"$base/2026-01-01", s"$base/2026-01-02", s"$base/2026-01-04",
+        s"$base/2026-01-02/00/000006-d.ndjson"))
+      assert(listed(root) == viaListFiles(root), root)
+    // a glob lists each matched directory as its own root
+    val (d1, m1) = viaListFiles(s"$base/2026-01-01")
+    val (d2, m2) = viaListFiles(s"$base/2026-01-02")
+    assert(listed(s"$base/2026-01-0[12]") == (((d1 ++ d2).sortBy(_._1), (m1 ++ m2).sorted)))
+    assert(listed(s"$base/missing") == ((Nil, Nil)))
+  }
+
+  test("source metrics report the backlog; pendingFiles reaches 0 after an AvailableNow drain") {
+    val base = Files.createTempDirectory("graft_dsv2_metrics").toString
+    def put(name: String, body: String): Unit =
+      Files.write(java.nio.file.Paths.get(s"$base/$name"), (body + "\n").getBytes("UTF-8"))
+    (1 to 3).foreach(i =>
+      put(f"$i%06d.ndjson", s"""{"after": "v$i", "key": "[$i]", "updated": "$i.0000000000"}"""))
+    put("000004.RESOLVED", """{"resolved": "4.0000000000"}""")
+    put("000005.ndjson", """{"after": "late", "key": "[5]", "updated": "5.0000000000"}""")
+
+    val q = Changefeed.readStream(spark, base, maxFilesPerTrigger = 1)
+      .writeStream.format("noop").trigger(Trigger.AvailableNow()).start()
+    assert(q.awaitTermination(120000))
+    val reported = q.recentProgress.filter(_.numInputRows > 0).map(_.sources.head.metrics)
+    // the file past the last marker is not visible, so not backlog
+    assert(reported.map(_.get("pendingFiles")).toSeq == Seq("2", "1", "0"))
+    assert(reported.forall(_.get("latestResolvedMarker").endsWith("/000004.RESOLVED")))
+  }
+
   test(".RESOLVED markers gate the listing and never emit phantom rows") {
     val base = Files.createTempDirectory("graft_dsv2_resolved").toString
     def put(rel: String, line: String): Unit =

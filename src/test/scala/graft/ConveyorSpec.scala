@@ -183,6 +183,80 @@ class ConveyorSpec extends SparkSpec {
     assert(f.cached("s").get.mode == Consistent)
   }
 
+  test("foreachBatchAccept reads the proposal log once per trigger") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    // one proposal row per trigger, passed through a UDF that counts its
+    // evaluations (nondeterministic, so no rewrite duplicates or folds it)
+    val reads = spark.sparkContext.longAccumulator("conveyor_proposal_reads")
+    val counted = udf { (n: Long) => reads.add(1L); n }.asNondeterministic()
+    val f = new Conveyor.Conveyors(Config(bestEffortWindowUs = 1000L))
+    val perTrigger = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
+    val fn = f.foreachBatchAccept("s",
+      proposalsOf = (_, batchId) => spark.range(1).select(lit(0L).as("part"),
+        counted(col("id") + lit(900000L + batchId)).as("nanos"), col("id").as("arr")),
+      partition = col("part"), nanos = col("nanos"), arrival = col("arr"),
+      nowUs = () => 1000L,
+      keys = Seq("k"), order = struct(col("nanos"), col("eid")),
+      tsNanos = col("nanos")) { (out, mode, _) =>
+      val before = reads.value
+      // the sink runs two actions on the accepted frame
+      val n = out.collect().length
+      out.agg(count(lit(1))).collect()
+      perTrigger += ((mode.name, n.toLong, reads.value - before))
+      ()
+    }
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[(Long, Long, Long)]
+    val q = in.toDF().toDF("k", "eid", "nanos")
+      .writeStream.foreachBatch((b: DataFrame, id: Long) => { fn(b, id); () })
+      .start()
+    try {
+      in.addData((1L, 1L, 100L), (2L, 2L, 200L)); q.processAllAvailable()
+      in.addData((1L, 3L, 300L)); q.processAllAvailable()
+      in.addData((3L, 4L, 400L)); q.processAllAvailable()
+    } finally q.stop()
+    assert(perTrigger.map(_._1).toSeq == Seq("consistent", "consistent", "consistent"))
+    assert(perTrigger.map(_._2).toSeq == Seq(2L, 1L, 1L))
+    // the sink's actions never re-read the log: the one read per
+    // trigger is the refresh's
+    assert(perTrigger.forall(_._3 == 0L), perTrigger)
+    assert(reads.value == 3L)
+  }
+
+  test("a growing proposal log is gated at the frontier read at refresh") {
+    import java.nio.file.Files
+    import graft.cdc.Checkpoint
+    val dir = Files.createTempDirectory("graft_conveyor_log").toString + "/log"
+    val table = "conveyor_growing_log"
+    proposals.write.parquet(dir)
+    spark.sql(s"CREATE TABLE $table (part BIGINT, nanos BIGINT, arr BIGINT) " +
+      s"USING parquet LOCATION '$dir'")
+    try {
+      def frontierOf(log: org.apache.spark.sql.DataFrame): Long =
+        Checkpoint.groupResolved(Checkpoint.advance(log, col("part"), col("nanos"),
+          col("arr"))).collect()(0).getLong(0)
+      val log = spark.table(table)
+      val c = new Conveyor.Conveyors(Config(bestEffortWindowUs = 1000L))
+        .refresh("s", log, col("part"), col("nanos"), col("arr"), nowUs = 100L)
+      assert(c.mode == Consistent) // frontier 200: lag 100 <= window/4
+      val be = new Conveyor.Conveyors(Config(bestEffortOnly = true))
+        .refresh("s", log, col("part"), col("nanos"), col("arr"), nowUs = 100L)
+      // a frontier-advancing file lands after the refresh; the same
+      // table frame now reads a frontier of 400
+      Seq((0L, 400L, 3L), (1L, 400L, 4L)).toDF("part", "nanos", "arr")
+        .write.insertInto(table)
+      assert(frontierOf(log) == 400L)
+      // both gates still hold at 200, the frontier the mode was chosen on
+      val ord = struct(col("nanos"), col("eid"))
+      val cons = c.accept(muts, Seq("k"), ord, col("nanos")).orderBy("k").collect()
+      assert(cons.map(_.getLong(2)).toSeq == Seq(100L, 150L))
+      val spec = be.accept(muts, Seq("k"), ord, col("nanos")).orderBy("k").collect()
+        .map(r => r.getBoolean(r.fieldIndex("speculative")))
+      assert(spec.toSeq == Seq(true, false)) // 300 lies beyond 200, not beyond 400
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
   test("two schemas flip modes independently in one stream") {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

@@ -97,6 +97,21 @@ class FunctionsSpec extends SparkSpec {
     assert(withNull(0).isNullAt(0))
   }
 
+  test("graft_dot_q / graft_dist2_q usage gives the non-null element rule and a recipe that works") {
+    GraftFunctions.register(spark)
+    // arrays with nullable elements, as a parquet read yields them
+    val rows = Seq((Seq(Some(1L), None, Some(3L)), Seq(Some(2L), Some(5L), None)))
+      .toDF("a", "b")
+    for (fn <- Seq("graft_dot_q", "graft_dist2_q")) {
+      val usage = spark.sql(s"DESCRIBE FUNCTION $fn").collect().map(_.getString(0)).mkString("\n")
+      assert(usage.contains("must be non-null") && usage.contains("coalesce(x, 0L)"), usage)
+      intercept[org.apache.spark.sql.AnalysisException](rows.selectExpr(s"$fn(a, b)").collect())
+      val fixed = rows.selectExpr(
+        s"$fn(transform(a, x -> coalesce(x, 0L)), transform(b, x -> coalesce(x, 0L)))")
+      assert(fixed.head().getLong(0) == (if (fn == "graft_dot_q") 2L else 1L + 25L + 9L))
+    }
+  }
+
   test("graft_dot_q / graft_dist2_q: interpreted eval agrees with codegen") {
     GraftFunctions.register(spark)
     val rows = Seq((1L, Array(2L, -3L, 7L), Array(5L, 11L, -13L))).toDF("id", "a", "b")

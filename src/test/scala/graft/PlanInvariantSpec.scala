@@ -287,4 +287,31 @@ class PlanInvariantSpec extends SparkSpec {
     // and the scan really is schema-projected, not just filter-pruned
     lineitemQueries.foreach(n => assert(all(n).contains("ReadSchema"), n))
   }
+
+  test("conveyor accept plans gate on a local relation, never on the proposal log") {
+    import graft.cdc.Conveyor
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, Range, Window}
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // the proposal log is the only Range leaf: an Aggregate or Window
+    // above one would re-run the frontier on every action
+    val proposals = spark.range(8).select((col("id") % 2).as("part"),
+      (col("id") * 100).as("nanos"), col("id").as("arr"))
+    val muts = Seq((1L, 10L, 100L), (1L, 11L, 300L), (2L, 12L, 150L))
+      .toDF("k", "eid", "nanos")
+    for (cfg <- Seq(Conveyor.Config(bestEffortOnly = true), Conveyor.Config())) {
+      val c = new Conveyor.Conveyors(cfg)
+        .get("s", proposals, col("part"), col("nanos"), col("arr"), nowUs = 0L)
+      val plan = c.accept(muts, Seq("k"), struct(col("nanos"), col("eid")), col("nanos"))
+        .queryExecution.optimizedPlan
+      val overLog = plan.collect {
+        case n @ (_: Aggregate | _: Window) if n.exists(_.isInstanceOf[Range]) => n.nodeName
+      }
+      assert(overLog.isEmpty, s"${c.mode.name}: ${overLog.mkString(", ")} over the proposal log")
+      assert(plan.collectLeaves().exists {
+        case l: LocalRelation => l.output.map(_.name) == Seq("resolved_nanos")
+        case _ => false
+      }, s"${c.mode.name}: the gate does not read a one-row local relation\n$plan")
+    }
+  }
 }
