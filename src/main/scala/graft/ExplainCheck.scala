@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print the formatted physical plan of one
   * `SparkEntry.queries` entry (plan-audit loop — the per-operator
   * "is this the plan I'd want at 100 TB" check).
@@ -10,11 +8,7 @@ import org.apache.spark.sql.SparkSession
   */
 object ExplainCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.builder("8").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     SparkEntry.queries(args(0))(spark, dir).explain("formatted")

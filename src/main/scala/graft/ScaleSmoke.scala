@@ -27,13 +27,7 @@ object ScaleSmoke {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // id spacing: next power of two > reps keeps replica ids disjoint
     val mult = Integer.highestOneBit(math.max(reps, 1)) * 2
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val reps100 = reps != 10 // the 100×-subset regime

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: best-of-2 timing of a single query at the bench scale.
   *
   * With SPARK_GRAFT_STAGE_SPREAD set, the SECOND (steady) run also
@@ -29,12 +27,7 @@ object TimeOne {
     val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
       .flatMap(_.split(";")).map(_.split("=", 2)).collect {
         case Array(k, v) => (k.trim, v.trim) }
-    val spark = extra.foldLeft(
-        SparkSession.builder().master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-          .config("spark.ui.enabled", "false")) {
+    val spark = extra.foldLeft(Session.builder(cpus)) {
         case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

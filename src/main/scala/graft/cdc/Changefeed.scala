@@ -80,7 +80,7 @@ object Changefeed {
     * `internal/util/cdcjson/ndjson_parser.go:76`), and the parsed HLC.
     */
   def resolvedMarkers(spark: SparkSession, dir: String): DataFrame = {
-    val markers = graft.sources.ChangefeedFiles.listClassified(dir)._2
+    val markers = graft.sources.ChangefeedFiles.listClassifiedSized(dir)._2
     val bodySchema = StructType(Seq(StructField("resolved", StringType)))
     val base =
       if (markers.isEmpty)

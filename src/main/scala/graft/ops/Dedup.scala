@@ -11,23 +11,17 @@ import org.apache.spark.sql.functions._
   * hash aggregations — never an O(n²) comparison. The LSH band-bucket
   * join bounds candidate generation; exact Jaccard runs only on
   * candidates. All hashing is `xxhash64` (codegen'd, no UDFs).
+  *
+  * Small frames read 3–5× inside one plan (membership maps, shingle
+  * frames) are always pinned through [[Materialize.barrier]] —
+  * measured 10–30% on the dedup family. The seam is the one place that
+  * picks how to pin, per master: localCheckpoint locally (fast,
+  * non-replicated — fine in one JVM), reliable checkpoint or
+  * replicated persist on a cluster (executor-loss-tolerant).
   */
 object Dedup {
 
   private def norm(text: Column): Column = lower(trim(text))
-
-  /** Small frames read 3–5× inside one plan (membership maps, shingle
-    * frames) are eagerly materialized ([[Materialize.barrier]]) —
-    * measured 10–30% on the dedup family. The seam picks the
-    * materializer per master: localCheckpoint locally (fast,
-    * non-replicated — fine in one JVM), reliable checkpoint or
-    * replicated persist on a cluster (executor-loss-tolerant). Callers
-    * that prefer retry-through-lineage over the re-read can still pass
-    * `eagerCheckpoint = false` (the plan recomputes the subtree per
-    * read).
-    */
-  private def maybeCheckpoint(df: DataFrame, eager: Boolean): DataFrame =
-    if (eager) Materialize.barrier(df) else df
 
   /** Exact dedup: md5 over normalized text, groups keyed by the hash;
     * canonical doc = min id per group.
@@ -53,9 +47,8 @@ object Dedup {
     * so the expansion is exact, not approximate). The reference stages
     * an analogous collapse: msort dedups staged mutations before apply.
     */
-  def exactMembership(docs: DataFrame, id: String, text: String,
-      eagerCheckpoint: Boolean = true): DataFrame =
-    collapseExact(docs, id, text, eagerCheckpoint)._1
+  def exactMembership(docs: DataFrame, id: String, text: String): DataFrame =
+    collapseExact(docs, id, text)._1
 
   /** The collapse itself: (members = (id, rep_id), repDocs = one doc
     * row per distinct normalized text). The fingerprint aggregate
@@ -64,10 +57,9 @@ object Dedup {
     * docs frame via a semi-join on the (typically broadcastable,
     * AQE-sized) representative-id set.
     */
-  def collapseExact(docs: DataFrame, id: String, text: String,
-      eagerCheckpoint: Boolean = true): (DataFrame, DataFrame) = {
-    val (members, repDocs) = collapseExactRaw(docs, id, text, eagerCheckpoint)
-    (maybeCheckpoint(members, eagerCheckpoint), repDocs)
+  def collapseExact(docs: DataFrame, id: String, text: String): (DataFrame, DataFrame) = {
+    val (members, repDocs) = collapseExactRaw(docs, id, text)
+    (Materialize.barrier(members), repDocs)
   }
 
   /** [[collapseExact]] without the membership pin — for multi-pin
@@ -88,11 +80,10 @@ object Dedup {
     * signature projections — and the pinned frame is the leaf-pin
     * rule's WIN side: id + 32-char hash, never text.
     */
-  private def collapseExactRaw(docs: DataFrame, id: String, text: String,
-      eagerFp: Boolean = true): (DataFrame, DataFrame) = {
-    val fp0 = docs.filter(col(id).isNotNull && col(text).isNotNull)
-      .select(col(id), md5(norm(col(text))).as("__fp"))
-    val fp = if (eagerFp) Materialize.barrier(fp0) else fp0
+  private def collapseExactRaw(docs: DataFrame, id: String,
+      text: String): (DataFrame, DataFrame) = {
+    val fp = Materialize.barrier(docs.filter(col(id).isNotNull && col(text).isNotNull)
+      .select(col(id), md5(norm(col(text))).as("__fp")))
     val groups = fp.groupBy("__fp").agg(min(col(id)).as("rep_id"))
     val members = fp.join(groups, "__fp").select(col(id), col("rep_id"))
     val repDocs = docs.join(groups.select(col("rep_id").as(id)), Seq(id), "left_semi")
@@ -386,7 +377,8 @@ object Dedup {
     * rounds, not O(d). Convergence is detected exactly (labels are
     * monotone non-increasing, so an unchanged sum is a proof) and
     * non-convergence after `maxIters` raises rather than silently
-    * returning split clusters.
+    * returning split clusters. Edges with an endpoint outside `docs`
+    * are dropped: the components are those of the docs-only subgraph.
     */
   def dupClusters(docs: DataFrame, id: String, pairs: DataFrame,
       maxIters: Int = 12): DataFrame = {
@@ -398,9 +390,17 @@ object Dedup {
     // 32-task stages moving zero bytes at ~100 ms/task of pure task
     // overhead. The barrier materializes the AQE-final plan instead, so
     // the loop's width follows the edge set's actual size at any scale.
+    // Both endpoints are semi-joined against the doc ids inside the
+    // same pin, so pairs ⊆ docs holds without an extra pin: an edge to
+    // a non-doc id would otherwise pull that id into a component,
+    // inflating cluster_size and possibly naming a non-doc cluster_id.
+    val ids = docs.select(col(id).as("__doc"))
+    val inDocs = pairs
+      .join(ids, col("id_a") === col("__doc"), "left_semi")
+      .join(ids, col("id_b") === col("__doc"), "left_semi")
     val edges = Materialize.barrier(
-      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+      inDocs.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .union(inDocs.select(col("id_b").as("src"), col("id_a").as("dst")))
         .distinct())
     // only nodes that touch an edge need propagation — singletons (the
     // overwhelming majority in a dedup graph) bypass the loop entirely
@@ -458,7 +458,7 @@ object Dedup {
     // members are labeled (labels hold exactly the edge-touching
     // nodes), and a singleton's cluster_id is its own id, which can
     // never equal a labeled cluster's id (those are min ids of
-    // edge-touching nodes, and pairs are drawn from the docs universe)
+    // edge-touching nodes, and the edges were filtered to docs above)
     // — so size = the label count where one exists, else 1. One corpus
     // scan, one join with the corpus, one tiny label aggregate.
     val labelSizes = labels.groupBy("cluster_id")
@@ -508,9 +508,8 @@ object Dedup {
     */
   private def repDupPairs(docs: DataFrame, id: String, text: String,
       threshold: Double, numHashes: Int, bands: Int,
-      maxBucketSize: Int, eagerCheckpoint: Boolean,
-      k: Int = 3): (DataFrame, DataFrame, DataFrame) = {
-    val (membersRaw, repDocs) = collapseExactRaw(docs, id, text, eagerCheckpoint)
+      maxBucketSize: Int, k: Int = 3): (DataFrame, DataFrame, DataFrame) = {
+    val (membersRaw, repDocs) = collapseExactRaw(docs, id, text)
     // the banding default is rows-per-band = 2: candidate recall at the
     // THRESHOLD (not just at dup-grade J) is what makes the verified
     // output exhaustive — miss = (1−J²)^b = 0.36³² ≈ 6e-15 at J = 0.8,
@@ -519,18 +518,16 @@ object Dedup {
     // verification stages (eagerly checkpointed — it is read 3×). The
     // membership and shingle pins are independent, so they materialize
     // concurrently (one job latency, not two).
-    val Seq(members, sh) =
-      if (eagerCheckpoint) Materialize.barrierAll(Seq(
-        membersRaw, shingleHashes(repDocs, id, text, k)))
-      else Seq(membersRaw, shingleHashes(repDocs, id, text, k))
+    val Seq(members, sh) = Materialize.barrierAll(Seq(
+      membersRaw, shingleHashes(repDocs, id, text, k)))
     // the candidate-pair frame is read TWICE by jaccardFromShingles
     // (the intersection derivation and the outer left join) — unpinned,
     // the minhash + LSH band self-join + distinct re-ran per read (the
     // r16 twin-stage audit signature). Two ids per row, the leaf-pin
     // rule's win side.
-    val cands = maybeCheckpoint(
+    val cands = Materialize.barrier(
       lshCandidates(minhashFromShingles(sh, id, numHashes), id,
-        bands, numHashes / bands, maxBucketSize), eagerCheckpoint)
+        bands, numHashes / bands, maxBucketSize))
     val repPairs = jaccardFromShingles(sh, id, cands)
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "n_a", "n_b", "n_inter", "jaccard")
@@ -557,10 +554,9 @@ object Dedup {
     */
   def verifiedDupPairs(docs: DataFrame, id: String, text: String,
       threshold: Double, numHashes: Int = 64, bands: Int = 32,
-      maxBucketSize: Int = Int.MaxValue,
-      eagerCheckpoint: Boolean = true, k: Int = 3): DataFrame = {
+      maxBucketSize: Int = Int.MaxValue, k: Int = 3): DataFrame = {
     val (members, sh, repPairs) = repDupPairs(docs, id, text, threshold,
-      numHashes, bands, maxBucketSize, eagerCheckpoint, k)
+      numHashes, bands, maxBucketSize, k)
     val repSizes = sh.groupBy(col(id)).agg(count(lit(1)).as("n"))
       .select(col(id).as("rep_id"), col("n"))
     expandVerified(repPairs, members, repSizes, id)
@@ -798,7 +794,6 @@ object Dedup {
   final class StreamingDedup(initial: DedupIndex, compactPath: String,
       compactEvery: Int, id: String, text: String, threshold: Double,
       numHashes: Int = 64, bands: Int = 32, k: Int = 3,
-      eagerCheckpoint: Boolean = true,
       resumeBatchId: Long = -1L,
       resumePairs: Option[DataFrame] = None) {
     require(compactEvery > 0, "compactEvery must be positive")
@@ -847,7 +842,7 @@ object Dedup {
 
     private def ingestCore(batch: DataFrame, batchId: Option[Long]): DataFrame = {
       val (pairs, next) = probeAndExtend(index0, batch, id, text, threshold,
-        numHashes, bands, k, eagerCheckpoint)
+        numHashes, bands, k)
       val out = pairs.localCheckpoint(true) // survive any later gen GC
       folded += 1
       index0 =
@@ -925,19 +920,17 @@ object Dedup {
     */
   def resumeStreamingDedup(spark: org.apache.spark.sql.SparkSession,
       compactPath: String, id: String, text: String, threshold: Double,
-      numHashes: Int = 64, bands: Int = 32, k: Int = 3,
-      eagerCheckpoint: Boolean = true): StreamingDedup = {
+      numHashes: Int = 64, bands: Int = 32, k: Int = 3): StreamingDedup = {
     val ix = loadIndex(spark, compactPath)
     val base = newestCommittedGen(spark, compactPath, textGenDirs, "dedup index")
     val (bid, pairs) = progressSlot(spark, base)
     new StreamingDedup(ix, compactPath, compactEvery = 1, id, text, threshold,
-      numHashes, bands, k, eagerCheckpoint, bid, pairs)
+      numHashes, bands, k, bid, pairs)
   }
 
   def buildDedupIndex(docs: DataFrame, id: String, text: String,
-      numHashes: Int = 64, bands: Int = 32, k: Int = 3,
-      eagerCheckpoint: Boolean = true): DedupIndex = {
-    val (membersRaw, repDocs) = collapseExactRaw(docs, id, text, eagerCheckpoint)
+      numHashes: Int = 64, bands: Int = 32, k: Int = 3): DedupIndex = {
+    val (membersRaw, repDocs) = collapseExactRaw(docs, id, text)
     // pinned like repDupPairs/ngramCoverage pin theirs (r15 stage
     // audit): the index's band frame AND its shingles frame both derive
     // from `sh`, so an unpinned build re-ran the tokenize+shingle
@@ -946,17 +939,15 @@ object Dedup {
     // The frame is 2 longs per shingle; the nightly deployment writes
     // it to parquet anyway, so the pin is the in-session equivalent.
     // Membership + shingle pins are independent → concurrent (r16).
-    val Seq(members, sh) =
-      if (eagerCheckpoint) Materialize.barrierAll(Seq(
-        membersRaw, shingleHashes(repDocs, id, text, k)))
-      else Seq(membersRaw, shingleHashes(repDocs, id, text, k))
+    val Seq(members, sh) = Materialize.barrierAll(Seq(
+      membersRaw, shingleHashes(repDocs, id, text, k)))
     // the band arm is pinned like incrementalCore pins ITS batch arm
     // (and like the nightly deployment persists it to parquet): every
     // probe's candidate join reads it, and unpinned each read re-ran
     // the 32-hash minhash fold + band explode over the corpus shingles
     DedupIndex(
-      maybeCheckpoint(bandFrame(minhashFromShingles(sh, id, numHashes),
-        id, bands, numHashes / bands), eagerCheckpoint),
+      Materialize.barrier(bandFrame(minhashFromShingles(sh, id, numHashes),
+        id, bands, numHashes / bands)),
       sh, members, numHashes, bands, k)
   }
 
@@ -970,12 +961,12 @@ object Dedup {
     * (identical signatures share every bucket) at Jaccard 1.
     */
   def extendIndex(index: DedupIndex, newDocs: DataFrame, id: String,
-      text: String, numHashes: Int = 64, bands: Int = 32, k: Int = 3,
-      eagerCheckpoint: Boolean = true): DedupIndex = {
+      text: String, numHashes: Int = 64, bands: Int = 32,
+      k: Int = 3): DedupIndex = {
     // a batch banded differently than the index would union frames the
     // probe side can never match — same gate as the probe path
     requireSameBanding(index, numHashes, bands, k, "batch")
-    val b = buildDedupIndex(newDocs, id, text, numHashes, bands, k, eagerCheckpoint)
+    val b = buildDedupIndex(newDocs, id, text, numHashes, bands, k)
     index.copy(bands = index.bands.unionByName(b.bands),
       shingles = index.shingles.unionByName(b.shingles),
       members = index.members.unionByName(b.members))
@@ -986,20 +977,19 @@ object Dedup {
     * ONCE for both. Returns (pairs touching the batch, extended
     * index). Each pair surfaces exactly once — when its later member
     * arrives — so the union of per-step pair outputs equals one
-    * full-corpus pass (spec-proven). With `eagerCheckpoint` on, every
-    * union arm of the growing index is a materialized localCheckpoint,
-    * so later probes reuse results instead of recomputing N batches of
-    * lineage; plan size still grows with batch count — a long-lived
-    * stream should periodically compact the index to parquet (the
-    * nightly [[buildDedupIndex]] path) and resume from the compacted
-    * frames.
+    * full-corpus pass (spec-proven). Every union arm of the growing
+    * index is pinned through [[Materialize]], so later probes reuse
+    * results instead of recomputing N batches of lineage; plan size
+    * still grows with batch count — a long-lived stream should
+    * periodically compact the index to parquet (the nightly
+    * [[buildDedupIndex]] path) and resume from the compacted frames.
     */
   def probeAndExtend(index: DedupIndex, newDocs: DataFrame, id: String,
       text: String, threshold: Double,
-      numHashes: Int = 64, bands: Int = 32, k: Int = 3,
-      eagerCheckpoint: Boolean = true): (DataFrame, DedupIndex) = {
+      numHashes: Int = 64, bands: Int = 32,
+      k: Int = 3): (DataFrame, DedupIndex) = {
     val (pairs, batch) = incrementalCore(newDocs, index, id, text, threshold,
-      numHashes, bands, k, eagerCheckpoint)
+      numHashes, bands, k)
     (pairs, index.copy(bands = index.bands.unionByName(batch.bands),
       shingles = index.shingles.unionByName(batch.shingles),
       members = index.members.unionByName(batch.members)))
@@ -1021,10 +1011,9 @@ object Dedup {
     */
   def incrementalDupPairs(newDocs: DataFrame, index: DedupIndex,
       id: String, text: String, threshold: Double,
-      numHashes: Int = 64, bands: Int = 32, k: Int = 3,
-      eagerCheckpoint: Boolean = true): DataFrame =
+      numHashes: Int = 64, bands: Int = 32, k: Int = 3): DataFrame =
     incrementalCore(newDocs, index, id, text, threshold,
-      numHashes, bands, k, eagerCheckpoint)._1
+      numHashes, bands, k)._1
 
   /** Shared probe core: (pairs touching the batch, the batch's own
     * index artifacts) — [[probeAndExtend]] reuses the artifacts so the
@@ -1032,30 +1021,29 @@ object Dedup {
     */
   private def incrementalCore(newDocs: DataFrame, index: DedupIndex,
       id: String, text: String, threshold: Double,
-      numHashes: Int, bands: Int, k: Int,
-      eagerCheckpoint: Boolean): (DataFrame, DedupIndex) = {
+      numHashes: Int, bands: Int, k: Int): (DataFrame, DedupIndex) = {
     requireSameBanding(index, numHashes, bands, k, "probe")
     // ONE collapse + shingle + signature pass over the batch, shared by
     // the new-vs-new pipeline and the index probe
     val (members, shNew, repPairsNew) = repDupPairs(newDocs, id, text,
-      threshold, numHashes, bands, Int.MaxValue, eagerCheckpoint, k)
+      threshold, numHashes, bands, Int.MaxValue, k)
     val repSizes = shNew.groupBy(col(id)).agg(count(lit(1)).as("n"))
       .select(col(id).as("rep_id"), col("n"))
     val newVsNew = expandVerified(repPairsNew, members, repSizes, id)
 
     // checkpointed so a growing extended index holds MATERIALIZED band
     // arms — later probes reuse them instead of re-deriving N batches
-    val newBands = maybeCheckpoint(
+    val newBands = Materialize.barrier(
       bandFrame(minhashFromShingles(shNew, id, numHashes),
-        id, bands, numHashes / bands), eagerCheckpoint)
+        id, bands, numHashes / bands))
     // pinned (r16): read three times — the touched-rep semi join and
     // jaccardFromShingles' two pair reads — and each unpinned read
     // re-ran the batch-vs-index band join + distinct
-    val cands = maybeCheckpoint(
+    val cands = Materialize.barrier(
       newBands.select(col("band_id"), col("bucket"), col(id).as("id_a"))
         .join(index.bands.select(col("band_id"), col("bucket"), col(id).as("id_b")),
           Seq("band_id", "bucket"))
-        .select("id_a", "id_b").distinct(), eagerCheckpoint)
+        .select("id_a", "id_b").distinct())
     // verification reads only the TOUCHED index representatives — the
     // semi-join keeps per-run cost proportional to the probe, not the
     // corpus (sizes stay exact: all shingles of a kept doc survive)
@@ -1064,7 +1052,7 @@ object Dedup {
     // the verify shingle frame (batch ∪ touched reps) is read three
     // times inside jaccardFromShingles (sizes + both intersection
     // joins) — pin the union once; its size is probe-proportional
-    val shVerify = maybeCheckpoint(shNew.unionByName(touched), eagerCheckpoint)
+    val shVerify = Materialize.barrier(shNew.unionByName(touched))
     val repPairs = jaccardFromShingles(shVerify, id, cands)
       .filter(col("jaccard") >= threshold)
     // expand BOTH reps to their identical members (same shingle set ⇒
@@ -1093,10 +1081,9 @@ object Dedup {
     */
   def verifiedDupEdges(docs: DataFrame, id: String, text: String,
       threshold: Double, numHashes: Int = 64, bands: Int = 32,
-      maxBucketSize: Int = Int.MaxValue,
-      eagerCheckpoint: Boolean = true, k: Int = 3): DataFrame = {
+      maxBucketSize: Int = Int.MaxValue, k: Int = 3): DataFrame = {
     val (members, _, repPairs) = repDupPairs(docs, id, text, threshold,
-      numHashes, bands, maxBucketSize, eagerCheckpoint, k)
+      numHashes, bands, maxBucketSize, k)
     // rep = min id of its group, so star edges keep the id_a < id_b
     // orientation the pair convention uses
     val star = members.filter(col(id) =!= col("rep_id"))
@@ -1116,13 +1103,12 @@ object Dedup {
     * pairwise comparison.
     */
   def ngramCoverage(docs: DataFrame, id: String, text: String,
-      k: Int = 3, threshold: Double = 0.6,
-      eagerCheckpoint: Boolean = true): DataFrame = {
+      k: Int = 3, threshold: Double = 0.6): DataFrame = {
     // checkpointed: the df-aggregate subtree and the join subtree are
     // not canonically identical, so ReuseExchange cannot share them —
     // without this the tokenize+shingle flatMap (the measured hot
     // path) runs twice
-    val sh = maybeCheckpoint(shingleHashes(docs, id, text, k), eagerCheckpoint)
+    val sh = Materialize.barrier(shingleHashes(docs, id, text, k))
     val df = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
     sh.join(df, "shingle")
       .groupBy(col(id))
@@ -1152,26 +1138,22 @@ object Dedup {
     */
   def simhashPairs(docs: DataFrame, id: String, text: String,
       nBands: Int = 8, maxHamming: Int = 23, threshold: Double = 0.8,
-      maxBucketSize: Int = Int.MaxValue,
-      eagerCheckpoint: Boolean = true): DataFrame = {
+      maxBucketSize: Int = Int.MaxValue): DataFrame = {
     require(64 % nBands == 0, "nBands must divide 64")
     val width = 64 / nBands
     // exact-identity collapse first (see verifiedDupPairs): identical
     // docs share a simhash, so they collide in every band — without the
     // collapse one B-sized identical cluster yields B²/2 band candidates
-    val (membersRaw, repDocs) = collapseExactRaw(docs, id, text, eagerCheckpoint)
+    val (membersRaw, repDocs) = collapseExactRaw(docs, id, text)
     // three shared frames, all pinned: the membership map, the shingle
     // frame (feeds signatures + verify), and the signature frame (feeds
     // the band join's both sides and the minhash tail's two hamming
     // lookups). None depends on another's PINNED result, so the three
     // materializing jobs run CONCURRENTLY (barrierAll, r16) instead of
     // paying three serial job latencies.
-    val Seq(members, sh, sig) =
-      if (eagerCheckpoint) Materialize.barrierAll(Seq(membersRaw,
-        shingleHashes(repDocs, id, text),
-        simhash(repDocs, id, text).select(col(id), col("simhash"))))
-      else Seq(membersRaw, shingleHashes(repDocs, id, text),
-        simhash(repDocs, id, text).select(col(id), col("simhash")))
+    val Seq(members, sh, sig) = Materialize.barrierAll(Seq(membersRaw,
+      shingleHashes(repDocs, id, text),
+      simhash(repDocs, id, text).select(col(id), col("simhash"))))
     val banded = sig.select(col(id), col("simhash"),
       posexplode(array((0 until nBands).map(b =>
         shiftrightunsigned(col("simhash"), b * width)
@@ -1218,8 +1200,7 @@ object Dedup {
     // pinned like repDupPairs' candidate frame: jaccardFromShingles
     // reads it twice, and each unpinned read re-ran BOTH ensemble arms
     // (the simhash band self-join and the minhash-LSH tail)
-    val cands = maybeCheckpoint(
-      bandCands.union(lshTail).distinct(), eagerCheckpoint)
+    val cands = Materialize.barrier(bandCands.union(lshTail).distinct())
     val repPairs = jaccardFromShingles(sh, id, cands)
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "n_a", "n_b", "n_inter", "jaccard")

@@ -606,22 +606,25 @@ object Similarity {
       idCol: String, vecCol: String, threshold: Double,
       maxBucketSize: Int = Int.MaxValue, verifyChunks: Int = 1): DataFrame =
     incrementalVecCore(batch, index, idCol, vecCol, threshold,
-      eagerCheckpoint = false, maxBucketSize, verifyChunks)._1
+      pinBatch = false, maxBucketSize, verifyChunks)._1
 
   /** Shared probe core: (pairs touching the batch, the batch's own
     * index artifacts) — [[probeAndExtendVec]] reuses the artifacts so
     * the streaming loop never hashes a batch twice (the contract the
-    * text sibling [[Dedup]] `incrementalCore` documents). With
-    * `eagerCheckpoint` the batch frames are materialized once, so the
-    * pair legs AND the extended index's union arm both read results
-    * instead of re-deriving the collapse + bucketing lineage.
+    * text sibling [[Dedup]] `incrementalCore` documents). `pinBatch`
+    * is private to this object because its two callers differ: the
+    * probe-and-fold path pins the three batch frames through
+    * [[Materialize]], so the pair legs AND the extended index's union
+    * arm both read results instead of re-deriving the collapse +
+    * bucketing lineage; the probe-only path reads each frame once per
+    * pair leg and skips the three pin jobs.
     * `maxBucketSize` caps the new-vs-new leg's candidate cells (the
     * cross leg's cells are already bounded by the batch side — only
     * batch reps explode against them).
     */
   private def incrementalVecCore(batch: DataFrame, index: EmbeddingIndex,
       idCol: String, vecCol: String, threshold: Double,
-      eagerCheckpoint: Boolean,
+      pinBatch: Boolean,
       maxBucketSize: Int = Int.MaxValue,
       verifyChunks: Int = 1): (DataFrame, EmbeddingIndex) = {
     // the index's granularity was sized (or pinned) for SOME threshold;
@@ -638,7 +641,7 @@ object Similarity {
         "higher threshold; rebuild with auto granularity at THIS threshold " +
         "or accept the reduced recall.")
     val b0 = buildEmbeddingIndex(batch, idCol, vecCol, index.nPlanes, index.nTables)
-    val b = if (!eagerCheckpoint) b0
+    val b = if (!pinBatch) b0
       else EmbeddingIndex(Materialize.barrier(b0.buckets),
         Materialize.barrier(b0.repVecs), Materialize.barrier(b0.members),
         b0.nPlanes, b0.nTables)
@@ -685,10 +688,9 @@ object Similarity {
     */
   def probeAndExtendVec(index: EmbeddingIndex, batch: DataFrame,
       idCol: String, vecCol: String, threshold: Double,
-      eagerCheckpoint: Boolean = true,
       maxBucketSize: Int = Int.MaxValue): (DataFrame, EmbeddingIndex) = {
     val (pairs, b) = incrementalVecCore(batch, index, idCol, vecCol,
-      threshold, eagerCheckpoint, maxBucketSize)
+      threshold, pinBatch = true, maxBucketSize)
     (pairs, EmbeddingIndex(index.buckets.unionByName(b.buckets),
       index.repVecs.unionByName(b.repVecs),
       index.members.unionByName(b.members), index.nPlanes, index.nTables))
@@ -783,7 +785,7 @@ object Similarity {
     */
   final class StreamingVecDedup(initial: EmbeddingIndex, compactPath: String,
       compactEvery: Int, idCol: String, vecCol: String, threshold: Double,
-      eagerCheckpoint: Boolean = true, maxBucketSize: Int = Int.MaxValue,
+      maxBucketSize: Int = Int.MaxValue,
       resumeBatchId: Long = -1L, resumePairs: Option[DataFrame] = None) {
     require(compactEvery > 0, "compactEvery must be positive")
     private var index0 = initial
@@ -816,7 +818,7 @@ object Similarity {
 
     private def ingestCore(batch: DataFrame, batchId: Option[Long]): DataFrame = {
       val (pairs, next) = probeAndExtendVec(index0, batch, idCol, vecCol,
-        threshold, eagerCheckpoint, maxBucketSize)
+        threshold, maxBucketSize)
       val out = pairs.localCheckpoint(true) // survive any later gen GC
       folded += 1
       index0 =
@@ -834,14 +836,13 @@ object Similarity {
     */
   def resumeStreamingVecDedup(spark: org.apache.spark.sql.SparkSession,
       compactPath: String, idCol: String, vecCol: String, threshold: Double,
-      eagerCheckpoint: Boolean = true,
       maxBucketSize: Int = Int.MaxValue): StreamingVecDedup = {
     val ix = loadEmbeddingIndex(spark, compactPath)
     val base = Dedup.newestCommittedGen(spark, compactPath, vecGenDirs,
       "embedding index")
     val (bid, pairs) = Dedup.progressSlot(spark, base)
     new StreamingVecDedup(ix, compactPath, compactEvery = 1, idCol, vecCol,
-      threshold, eagerCheckpoint, maxBucketSize, bid, pairs)
+      threshold, maxBucketSize, bid, pairs)
   }
 
   /** Per-label centroid coherence: every member's cosine to its

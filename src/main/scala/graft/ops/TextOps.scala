@@ -363,14 +363,14 @@ object TextOps {
   }
 
   def tokenFrequencyStats(docs: DataFrame, id: String, text: String,
-      rareMax: Long = 2L, eagerCheckpoint: Boolean = true): DataFrame = {
+      rareMax: Long = 2L): DataFrame = {
     // checkpointed: the frequency-aggregate subtree and the join
     // subtree are not canonically identical, so ReuseExchange cannot
     // share them — without this the tokenize+explode pass runs twice
     // (the same reasoning as Dedup.ngramCoverage)
-    val tok0 = docs.select(col(id), explode(tokens(col(text))).as("__t"))
-      .filter(length(col("__t")) > 0)
-    val tok = if (eagerCheckpoint) Materialize.barrier(tok0) else tok0
+    val tok = Materialize.barrier(
+      docs.select(col(id), explode(tokens(col(text))).as("__t"))
+        .filter(length(col("__t")) > 0))
     val freq = tok.groupBy("__t").agg(count(lit(1)).as("__f"))
     tok.join(freq, "__t")
       .groupBy(col(id))

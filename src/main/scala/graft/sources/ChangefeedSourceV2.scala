@@ -219,10 +219,15 @@ class ChangefeedMicroBatchStream(readSchema: StructType, dir: String, maxFilesPe
   // dominates trigger latency otherwise)
   @volatile private var lastListing: (Array[String], Array[String]) = _
 
+  // the streaming listing keeps names only
+  private def listVisible(): (Array[String], Array[String]) = {
+    val (data, markers) = ChangefeedFiles.visibleClassified(dir)
+    (data.map(_._1), markers)
+  }
+
   private def currentClassified(refresh: Boolean): (Array[String], Array[String]) =
     availableNowSnapshot.getOrElse {
-      if (refresh || lastListing == null)
-        lastListing = ChangefeedFiles.visibleWithMarkers(dir)
+      if (refresh || lastListing == null) lastListing = listVisible()
       lastListing
     }
 
@@ -230,7 +235,7 @@ class ChangefeedMicroBatchStream(readSchema: StructType, dir: String, maxFilesPe
     currentClassified(refresh)._1
 
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowSnapshot = Some(ChangefeedFiles.visibleWithMarkers(dir))
+    availableNowSnapshot = Some(listVisible())
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.maxFiles(maxFilesPerTrigger)
 
@@ -433,17 +438,10 @@ object ChangefeedFiles {
     * Glob patterns expand via Hadoop `globStatus` (parity with the
     * generic json reader's path handling); matched directories recurse.
     * Lexicographic full-path order is ingest order for time-named
-    * objects, nested or flat alike.
-    */
-  def listClassified(dir: String): (Array[String], Array[String]) = {
-    val (data, markers) = listClassifiedSized(dir)
-    (data.map(_._1), markers)
-  }
-
-  /** [[listClassified]] with data-file byte sizes — one listing serves
-    * both partition planning and scan-statistics estimation
-    * ([[ChangefeedScan.estimateStatistics]] feeds AQE's broadcast
-    * decisions without a second directory walk).
+    * objects, nested or flat alike. Data files carry their byte sizes —
+    * one listing serves both partition planning and scan-statistics
+    * estimation ([[ChangefeedScan.estimateStatistics]] feeds AQE's
+    * broadcast decisions without a second directory walk).
     */
   def listClassifiedSized(dir: String): (Array[(String, Long)], Array[String]) = {
     val spark = SparkSession.active
@@ -484,40 +482,24 @@ object ChangefeedFiles {
     (data.result().sortBy(_._1), markers.result().sorted)
   }
 
-  /** Data files visible to a reader of `dir`, honoring the resolved
-    * frontier: when the bucket contains RESOLVED markers, only data
-    * files lexicographically BELOW the latest marker are finalized
-    * (reference objstore processes ranges between consecutive markers
-    * and never reads past the last one); files past it wait for the
-    * next marker. A directory with no markers is a plain feed — every
-    * data file is visible (the reference would idle forever on such a
-    * bucket; a marker-less directory here means a non-bucket layout,
-    * e.g. a test fixture or an export, where the finalized-prefix
-    * contract doesn't apply).
-    */
-  def list(dir: String): Array[String] = visibleSized(dir).map(_._1)
-
-  /** The ONE visibility rule, with sizes: data files below the latest
-    * RESOLVED marker (or all of them in a marker-less directory).
-    * `list`, batch partition planning, and scan statistics all derive
-    * from this so they can never disagree about what is readable.
-    */
-  def visibleSized(dir: String): Array[(String, Long)] = visibleClassified(dir)._1
-
-  /** [[visibleSized]] plus the full sorted marker list — pruning needs
-    * the markers to bracket row timestamps ([[pruneByUpdated]]).
+  /** The ONE visibility rule: (sized data files visible to a reader
+    * of `dir`, the full sorted marker list). When the bucket contains
+    * RESOLVED markers, only data files lexicographically BELOW the
+    * latest marker are finalized (reference objstore processes ranges
+    * between consecutive markers and never reads past the last one);
+    * files past it wait for the next marker. A directory with no
+    * markers is a plain feed — every data file is visible (the
+    * reference would idle forever on such a bucket; a marker-less
+    * directory here means a non-bucket layout, e.g. a test fixture or
+    * an export, where the finalized-prefix contract doesn't apply).
+    * Batch partition planning, scan statistics and the streaming
+    * listing all derive from this so they can never disagree about
+    * what is readable; pruning uses the markers to bracket row
+    * timestamps ([[pruneByUpdated]]).
     */
   def visibleClassified(dir: String): (Array[(String, Long)], Array[String]) = {
     val (data, markers) = listClassifiedSized(dir)
     (if (markers.isEmpty) data else data.filter(_._1 < markers.last), markers)
-  }
-
-  /** Visible data file names plus markers (streaming's per-trigger
-    * cached listing shape).
-    */
-  def visibleWithMarkers(dir: String): (Array[String], Array[String]) = {
-    val (data, markers) = visibleClassified(dir)
-    (data.map(_._1), markers)
   }
 
   /** The name-embedded timestamp of a changefeed object: a ≥ 6-digit

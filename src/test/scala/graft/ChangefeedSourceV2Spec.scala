@@ -161,7 +161,7 @@ class ChangefeedSourceV2Spec extends SparkSpec {
     put("2026-01-02/.hidden.ndjson", """{"not": "data"}""")
 
     // date dirs sort before each other and files within — ingest order
-    val listed = graft.sources.ChangefeedFiles.list(base)
+    val listed = graft.sources.ChangefeedFiles.visibleClassified(base)._1.map(_._1)
     assert(listed.length == 3)
     assert(listed.map(_.split('/').takeRight(2).mkString("/")).toSeq ==
       Seq("2026-01-01/000001.ndjson", "2026-01-01/000002.ndjson",
@@ -276,10 +276,10 @@ class ChangefeedSourceV2Spec extends SparkSpec {
     put("202601010020.RESOLVED", """{"resolved": "350.0000000000"}""")
     put("202601010025.ndjson", """{"after": "late", "key": "[4]", "updated": "400.0000000000"}""")
 
-    val (data, markers) = graft.sources.ChangefeedFiles.listClassified(base)
+    val (data, markers) = graft.sources.ChangefeedFiles.listClassifiedSized(base)
     assert(data.length == 4 && markers.length == 2)
     // the visible listing stops at the LAST marker: the late file waits
-    val visible = graft.sources.ChangefeedFiles.list(base)
+    val visible = graft.sources.ChangefeedFiles.visibleClassified(base)._1.map(_._1)
     assert(visible.map(_.split('/').last).toSeq ==
       Seq("202601010000.ndjson", "202601010005.ndjson", "202601010015.ndjson"))
 
@@ -372,7 +372,8 @@ class ChangefeedSourceV2Spec extends SparkSpec {
     // unstamped names disable pruning rather than risk wrong skips;
     // a MARKER-LESS directory never prunes (no upper bracket exists)
     import org.apache.spark.sql.sources.GreaterThanOrEqual
-    val (files, markers) = graft.sources.ChangefeedFiles.visibleWithMarkers(base)
+    val (sized, markers) = graft.sources.ChangefeedFiles.visibleClassified(base)
+    val files = sized.map(_._1)
     assert(graft.sources.ChangefeedFiles.pruneByUpdated(files, markers,
       Array(GreaterThanOrEqual("updated", "99999999.0"))).length == 4)
     assert(graft.sources.ChangefeedFiles.pruneByUpdated(

@@ -56,4 +56,20 @@ class ClustersPropertySpec extends SparkSpec {
     assert(sizes(0L) == 3L && sizes(5L) == 2L)
     assert((3L to 4L).forall(i => sizes(i) == 1L))
   }
+
+  test("dupClusters drops edges with an endpoint outside docs") {
+    val n = 10
+    val inside = Seq((0L, 1L), (1L, 2L), (5L, 6L))
+    // 100 would bridge 3 and 4 into one cluster of three; -5 would
+    // become 8's cluster_id although it is not a doc
+    val outside = Seq((3L, 100L), (4L, 100L), (-5L, 8L))
+    val docs = (0L until n.toLong).toDF("doc_id")
+    val out = Dedup.dupClusters(docs, "doc_id", (inside ++ outside).toDF("id_a", "id_b"))
+      .select("doc_id", "cluster_id", "cluster_size").as[(Long, Long, Long)].collect()
+    assert(out.map(r => r._1 -> r._2).toMap == unionFind(n, inside))
+    val members = out.groupBy(_._2).map { case (c, rs) => c -> rs.length.toLong }
+    out.foreach { case (d, c, size) =>
+      assert(size == members(c), s"doc $d: cluster_size $size, members ${members(c)}")
+    }
+  }
 }

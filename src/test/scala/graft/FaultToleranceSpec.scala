@@ -6,10 +6,13 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
-/** The 100 TB fault-tolerance story, checked: with
-  * `eagerCheckpoint = false` every dedup operator keeps full lineage, so
-  * a lost task attempt recomputes instead of failing the job — and the
-  * flag-off output is identical to the eager default.
+/** The 100 TB fault-tolerance story, checked on the path every query
+  * runs: dedup operators pin their shared frames through
+  * [[graft.ops.Materialize]], so a lost task attempt either recomputes
+  * through the lineage below a pin or, on a cluster, finds the pinned
+  * blocks replicated — either way the job finishes with the
+  * fault-free output. Faults are injected at the input scan, upstream
+  * of every pin.
   */
 class FaultToleranceSpec extends SparkSpec {
 
@@ -19,51 +22,25 @@ class FaultToleranceSpec extends SparkSpec {
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.mkString("|")).sorted.toSeq
 
-  test("eagerCheckpoint=false output is identical to the eager default") {
-    val eager = Dedup.verifiedDupPairs(docs, "doc_id", "text", 0.8)
-    val lazy_ = Dedup.verifiedDupPairs(docs, "doc_id", "text", 0.8,
-      eagerCheckpoint = false)
-    assert(sortedRows(lazy_) == sortedRows(eager))
-    assert(eager.count() > 0) // non-vacuous: testdata has dup pairs
-
-    val simEager = Dedup.simhashPairs(docs, "doc_id", "text")
-    val simLazy = Dedup.simhashPairs(docs, "doc_id", "text",
-      eagerCheckpoint = false)
-    assert(sortedRows(simLazy) == sortedRows(simEager))
-
-    val covEager = Dedup.ngramCoverage(docs, "doc_id", "text")
-    val covLazy = Dedup.ngramCoverage(docs, "doc_id", "text",
-      eagerCheckpoint = false)
-    assert(sortedRows(covLazy) == sortedRows(covEager))
-
-    val memEager = Dedup.exactMembership(docs, "doc_id", "text")
-    val memLazy = Dedup.exactMembership(docs, "doc_id", "text",
-      eagerCheckpoint = false)
-    assert(sortedRows(memLazy) == sortedRows(memEager))
-  }
-
-  test("a failed task attempt recomputes through lineage with eagerCheckpoint=false") {
+  test("a failed task attempt recomputes through lineage on the pinned path") {
     val faults: LongAccumulator = spark.sparkContext.longAccumulator("injected_faults")
     // Fault injection at the SOURCE of the pipeline: the first attempt
     // of every stage's partition 0 dies while scanning the input — the
     // scheduler must re-run the attempt and the job must still finish.
     val faulty = faultingCopy(docs, faults)
 
-    val expected = sortedRows(Dedup.verifiedDupPairs(docs, "doc_id", "text", 0.8,
-      eagerCheckpoint = false))
-    val got = sortedRows(Dedup.verifiedDupPairs(faulty, "doc_id", "text", 0.8,
-      eagerCheckpoint = false))
+    val expected = sortedRows(Dedup.verifiedDupPairs(docs, "doc_id", "text", 0.8))
+    val got = sortedRows(Dedup.verifiedDupPairs(faulty, "doc_id", "text", 0.8))
     assert(got == expected)
+    assert(expected.nonEmpty) // non-vacuous: testdata has dup pairs
     assert(faults.value > 0, "no retry attempt ran — test is vacuous")
   }
 
   test("ngramCoverage also survives first-attempt task loss") {
     val faults = spark.sparkContext.longAccumulator("injected_faults_cov")
     val faulty = faultingCopy(docs, faults)
-    val expected = sortedRows(Dedup.ngramCoverage(docs, "doc_id", "text",
-      eagerCheckpoint = false))
-    val got = sortedRows(Dedup.ngramCoverage(faulty, "doc_id", "text",
-      eagerCheckpoint = false))
+    val expected = sortedRows(Dedup.ngramCoverage(docs, "doc_id", "text"))
+    val got = sortedRows(Dedup.ngramCoverage(faulty, "doc_id", "text"))
     assert(got == expected)
     assert(faults.value > 0)
   }

@@ -12,16 +12,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+    val s = Session.builder("4")
       // local[4, 2]: allow one task retry, like a real cluster
       // (spark.task.maxFailures defaults to 4) — the fault-tolerance
       // specs inject first-attempt task failures and assert recovery
       .master("local[4, 2]")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
