@@ -141,8 +141,9 @@ object ScaleSmoke {
       graft.cdc.TxnLog.gtidFrontier(txns, "source", "gno")
     }
     // shared by the 10× and 100× suites: the vector-index incremental
-    // probe (the same core StreamingVecDedup.ingest runs per batch) at
-    // dup-grade 0.8 with AUTO granularity — see the 10× rationale below
+    // probe-only path (no batch pins, no fold; StreamingVecDedup.ingest
+    // runs probeAndExtendVec instead) at dup-grade 0.8 with AUTO
+    // granularity — see the 10× rationale below
     val embeddingIncr = (s: SparkSession, dir: String) => {
       val e = Tables.embeddings(s, dir)
       val orig = if (dir == base) col("vec_id")

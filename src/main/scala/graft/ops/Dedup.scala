@@ -754,9 +754,12 @@ object Dedup {
     * generation (crash between the three frame writes and the
     * sentinel) is skipped, falling back to the previous committed one.
     */
-  def loadIndex(spark: org.apache.spark.sql.SparkSession, path: String): DedupIndex = {
-    val base = newestCommittedGen(spark, path, textGenDirs, "dedup index")
-    val fs = new org.apache.hadoop.fs.Path(path)
+  def loadIndex(spark: org.apache.spark.sql.SparkSession, path: String): DedupIndex =
+    loadIndexAt(spark, newestCommittedGen(spark, path, textGenDirs, "dedup index"))
+
+  private def loadIndexAt(spark: org.apache.spark.sql.SparkSession,
+      base: String): DedupIndex = {
+    val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(spark.sessionState.newHadoopConf())
     // a pre-meta generation could have been written with ANY banding
     // the API allowed — load it as UNKNOWN (-1: caller's params govern,
@@ -785,27 +788,29 @@ object Dedup {
     *     sink(state.ingest(b))
     *   }
     * }}}
-    * EVERY batch's pair output is materialized (eager localCheckpoint)
+    * EVERY batch's pair output is pinned through [[Materialize.barrier]]
     * before it is returned: lazy pairs would read the currently-loaded
     * generation's parquet, which the compaction after next deletes — a
     * caller buffering a day of per-batch outputs before one sink write
-    * must not crash on files GC'd underneath the lineage.
+    * must not crash on files GC'd underneath the lineage — and on a
+    * cluster the pin is replicated or reliable, so the output also
+    * survives losing an executor before the sink reads it.
     */
   final class StreamingDedup(initial: DedupIndex, compactPath: String,
       compactEvery: Int, id: String, text: String, threshold: Double,
       numHashes: Int = 64, bands: Int = 32, k: Int = 3,
       resumeBatchId: Long = -1L,
       resumePairs: Option[DataFrame] = None) {
-    require(compactEvery > 0, "compactEvery must be positive")
+    private val loop = new StandingIndexLoop[DedupIndex](initial, compactEvery,
+      probeAndExtend(_, _, id, text, threshold, numHashes, bands, k),
+      compactIndex(_, compactPath, _), "id_a BIGINT, id_b BIGINT, " +
+        "n_a BIGINT, n_b BIGINT, n_inter BIGINT, jaccard DOUBLE",
+      resumeBatchId, resumePairs)
     requireSameBanding(initial, numHashes, bands, k, "loop")
-    private var index0 = initial
-    private var folded = 0
-    private var lastBatchId: Long = resumeBatchId
-    private var lastPairs: Option[DataFrame] = resumePairs
-    def index: DedupIndex = index0
+    def index: DedupIndex = loop.index
 
     /** Probe + fold one batch; returns the pairs touching it. */
-    def ingest(batch: DataFrame): DataFrame = ingestCore(batch, None)
+    def ingest(batch: DataFrame): DataFrame = loop.ingest(batch)
 
     /** Exactly-once probe + fold, keyed by the engine's `batchId` —
       * the `foreachBatch(b, batchId)` entry point for a CHECKPOINTED
@@ -826,87 +831,8 @@ object Dedup {
       * behind the persisted progress means the checkpoint dir and the
       * index dir belong to different streams — refused loudly.
       */
-    def ingestOnce(batchId: Long, batch: DataFrame): DataFrame = {
-      require(compactEvery == 1,
-        "ingestOnce (exactly-once) requires compactEvery = 1: every fold " +
-          "must persist before the engine commits the batch's offsets")
-      if (replayGuard(batchId, lastBatchId))
-        lastPairs.getOrElse(emptyPairs(batch.sparkSession, "jaccard"))
-      else {
-        val out = ingestCore(batch, Some(batchId))
-        lastBatchId = batchId
-        lastPairs = Some(out)
-        out
-      }
-    }
-
-    private def ingestCore(batch: DataFrame, batchId: Option[Long]): DataFrame = {
-      val (pairs, next) = probeAndExtend(index0, batch, id, text, threshold,
-        numHashes, bands, k)
-      val out = pairs.localCheckpoint(true) // survive any later gen GC
-      folded += 1
-      index0 =
-        if (folded % compactEvery == 0)
-          compactIndex(next, compactPath,
-            extraFrames = batchId.toSeq.flatMap(progressFrames(_, out)))
-        else next
-      out
-    }
-  }
-
-  /** The one-slot replay protocol, shared with [[Similarity]]'s vector
-    * loop so the two streaming paths cannot drift (the commit-window
-    * fix had to land in both — shared code makes the next one land
-    * once). `replayGuard` returns true when `batchId` is the persisted
-    * last batch (answer from storage); raises on ids BEHIND the
-    * persisted progress (checkpoint/index dir mismatch).
-    */
-  private[ops] def replayGuard(batchId: Long, lastBatchId: Long): Boolean = {
-    require(batchId >= 0, "batch ids are nonnegative")
-    if (batchId <= lastBatchId) {
-      require(batchId == lastBatchId,
-        s"batch $batchId replayed behind persisted progress $lastBatchId — " +
-          "the engine replays at most the last uncommitted batch, so an " +
-          "older id means this checkpoint dir and index dir belong to " +
-          "different streams")
-      true
-    } else false
-  }
-
-  /** Empty pair frame for a replay whose original run emitted none. */
-  private[ops] def emptyPairs(spark: org.apache.spark.sql.SparkSession,
-      scoreCol: String): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(Long, Long, Double)].toDF("id_a", "id_b", scoreCol)
-  }
-
-  /** The (progress, last_pairs) frames a fold persists with its
-    * generation — written BEFORE the check dirs (see compactFrames).
-    */
-  private[ops] def progressFrames(batchId: Long,
-      pairs: DataFrame): Seq[(String, DataFrame)] = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    Seq(
-      "progress" -> Seq(batchId).toDF("last_batch_id").coalesce(1),
-      "last_pairs" -> pairs)
-  }
-
-  /** Read a generation's persisted (progress, last_pairs) slot;
-    * (-1, None) for pre-exactly-once generations.
-    */
-  private[ops] def progressSlot(spark: org.apache.spark.sql.SparkSession,
-      base: String): (Long, Option[DataFrame]) = {
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$base/progress"))) {
-      val b = spark.read.parquet(s"$base/progress").collect()(0).getLong(0)
-      val p =
-        if (fs.exists(new org.apache.hadoop.fs.Path(s"$base/last_pairs")))
-          Some(spark.read.parquet(s"$base/last_pairs"))
-        else None
-      (b, p)
-    } else (-1L, None)
+    def ingestOnce(batchId: Long, batch: DataFrame): DataFrame =
+      loop.ingestOnce(batchId, batch)
   }
 
   /** Rebuild a [[StreamingDedup]] from its compaction directory — the
@@ -921,9 +847,8 @@ object Dedup {
   def resumeStreamingDedup(spark: org.apache.spark.sql.SparkSession,
       compactPath: String, id: String, text: String, threshold: Double,
       numHashes: Int = 64, bands: Int = 32, k: Int = 3): StreamingDedup = {
-    val ix = loadIndex(spark, compactPath)
-    val base = newestCommittedGen(spark, compactPath, textGenDirs, "dedup index")
-    val (bid, pairs) = progressSlot(spark, base)
+    val (ix, bid, pairs) = StandingIndexLoop.resume(spark, compactPath,
+      textGenDirs, "dedup index", loadIndexAt(spark, _))
     new StreamingDedup(ix, compactPath, compactEvery = 1, id, text, threshold,
       numHashes, bands, k, bid, pairs)
   }

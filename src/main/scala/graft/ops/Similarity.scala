@@ -736,9 +736,12 @@ object Similarity {
     * the frame writes and the sentinel) is skipped, falling back to
     * the previous committed one.
     */
-  def loadEmbeddingIndex(spark: SparkSession, path: String): EmbeddingIndex = {
-    val base = Dedup.newestCommittedGen(spark, path, vecGenDirs,
-      "embedding index")
+  def loadEmbeddingIndex(spark: SparkSession, path: String): EmbeddingIndex =
+    loadEmbeddingIndexAt(spark,
+      Dedup.newestCommittedGen(spark, path, vecGenDirs, "embedding index"))
+
+  private def loadEmbeddingIndexAt(spark: SparkSession,
+      base: String): EmbeddingIndex = {
     val meta = spark.read.parquet(s"$base/meta").collect()(0)
     EmbeddingIndex(
       spark.read.parquet(s"$base/buckets"),
@@ -775,59 +778,37 @@ object Similarity {
   /** The streaming vector-dedup loop: per micro-batch, probe + fold
     * ([[probeAndExtendVec]]), and every `compactEvery` folded batches
     * [[compactEmbeddingIndex]] the result so plan size stays constant
-    * over the stream's lifetime — the vector analogue of
-    * [[Dedup.StreamingDedup]]. EVERY batch's pair output is
-    * materialized (eager localCheckpoint) before it is returned: lazy
-    * pairs would read the currently-loaded generation's parquet, which
-    * the compaction after next deletes — a caller buffering a day of
-    * per-batch outputs before one sink write must not crash on files
-    * GC'd underneath the lineage.
+    * over the stream's lifetime — the vector configuration of the
+    * [[StandingIndexLoop]] that [[Dedup.StreamingDedup]] also runs.
+    * EVERY batch's pair output is pinned through [[Materialize.barrier]]
+    * before it is returned: lazy pairs would read the currently-loaded
+    * generation's parquet, which the compaction after next deletes — a
+    * caller buffering a day of per-batch outputs before one sink write
+    * must not crash on files GC'd underneath the lineage — and on a
+    * cluster the pin is replicated or reliable, so the output also
+    * survives losing an executor before the sink reads it.
     */
   final class StreamingVecDedup(initial: EmbeddingIndex, compactPath: String,
       compactEvery: Int, idCol: String, vecCol: String, threshold: Double,
       maxBucketSize: Int = Int.MaxValue,
       resumeBatchId: Long = -1L, resumePairs: Option[DataFrame] = None) {
-    require(compactEvery > 0, "compactEvery must be positive")
-    private var index0 = initial
-    private var folded = 0
-    private var lastBatchId: Long = resumeBatchId
-    private var lastPairs: Option[DataFrame] = resumePairs
-    def index: EmbeddingIndex = index0
+    private val loop = new StandingIndexLoop[EmbeddingIndex](initial,
+      compactEvery,
+      probeAndExtendVec(_, _, idCol, vecCol, threshold, maxBucketSize),
+      compactEmbeddingIndex(_, compactPath, _),
+      "id_a BIGINT, id_b BIGINT, cos_sim DOUBLE", resumeBatchId, resumePairs)
+    def index: EmbeddingIndex = loop.index
 
     /** Probe + fold one batch; returns the pairs touching it. */
-    def ingest(batch: DataFrame): DataFrame = ingestCore(batch, None)
+    def ingest(batch: DataFrame): DataFrame = loop.ingest(batch)
 
     /** Exactly-once probe + fold keyed by the engine's `batchId` —
       * the vector mirror of [[Dedup.StreamingDedup.ingestOnce]] (see
       * there for the crash-window rationale and the one-slot replay
       * protocol). Requires `compactEvery = 1`.
       */
-    def ingestOnce(batchId: Long, batch: DataFrame): DataFrame = {
-      require(compactEvery == 1,
-        "ingestOnce (exactly-once) requires compactEvery = 1: every fold " +
-          "must persist before the engine commits the batch's offsets")
-      if (Dedup.replayGuard(batchId, lastBatchId))
-        lastPairs.getOrElse(Dedup.emptyPairs(batch.sparkSession, "cos_sim"))
-      else {
-        val out = ingestCore(batch, Some(batchId))
-        lastBatchId = batchId
-        lastPairs = Some(out)
-        out
-      }
-    }
-
-    private def ingestCore(batch: DataFrame, batchId: Option[Long]): DataFrame = {
-      val (pairs, next) = probeAndExtendVec(index0, batch, idCol, vecCol,
-        threshold, maxBucketSize)
-      val out = pairs.localCheckpoint(true) // survive any later gen GC
-      folded += 1
-      index0 =
-        if (folded % compactEvery == 0)
-          compactEmbeddingIndex(next, compactPath,
-            extraFrames = batchId.toSeq.flatMap(Dedup.progressFrames(_, out)))
-        else next
-      out
-    }
+    def ingestOnce(batchId: Long, batch: DataFrame): DataFrame =
+      loop.ingestOnce(batchId, batch)
   }
 
   /** Rebuild a [[StreamingVecDedup]] from its compaction directory —
@@ -837,10 +818,8 @@ object Similarity {
   def resumeStreamingVecDedup(spark: org.apache.spark.sql.SparkSession,
       compactPath: String, idCol: String, vecCol: String, threshold: Double,
       maxBucketSize: Int = Int.MaxValue): StreamingVecDedup = {
-    val ix = loadEmbeddingIndex(spark, compactPath)
-    val base = Dedup.newestCommittedGen(spark, compactPath, vecGenDirs,
-      "embedding index")
-    val (bid, pairs) = Dedup.progressSlot(spark, base)
+    val (ix, bid, pairs) = StandingIndexLoop.resume(spark, compactPath,
+      vecGenDirs, "embedding index", loadEmbeddingIndexAt(spark, _))
     new StreamingVecDedup(ix, compactPath, compactEvery = 1, idCol, vecCol,
       threshold, maxBucketSize, bid, pairs)
   }

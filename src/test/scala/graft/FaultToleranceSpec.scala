@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, Similarity}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -59,6 +59,63 @@ class FaultToleranceSpec extends SparkSpec {
     assert(sortedRows(m) == sortedRows(src))
     assert(faults.value > 0, "no retry attempt ran — test is vacuous")
     Materialize.release(m)
+  }
+
+  // the exactly-once streaming path: task loss while ingestOnce folds a
+  // batch must neither change the pairs nor fold any row twice, and the
+  // generation it commits must answer a replay from storage
+  private def tmpDir(p: String): String =
+    java.nio.file.Files.createTempDirectory(p).toString
+
+  test("StreamingDedup.ingestOnce survives first-attempt task loss without a double fold") {
+    val base = Dedup.buildDedupIndex(docs.filter(col("doc_id") % 4 =!= 0),
+      "doc_id", "text")
+    val batch = docs.filter(col("doc_id") % 4 === 0)
+    def rows(ix: Dedup.DedupIndex) = Seq(ix.bands, ix.shingles, ix.members).map(_.count())
+    val clean = new Dedup.StreamingDedup(base, tmpDir("graft_ft_clean"),
+      compactEvery = 1, "doc_id", "text", 0.8)
+    val expected = sortedRows(clean.ingestOnce(0L, batch))
+    val faults = spark.sparkContext.longAccumulator("injected_faults_once")
+    val dir = tmpDir("graft_ft_faulty")
+    val faulty = new Dedup.StreamingDedup(base, dir, compactEvery = 1,
+      "doc_id", "text", 0.8)
+    val got = sortedRows(faulty.ingestOnce(0L, faultingCopy(batch, faults)))
+    assert(faults.value > 0, "no retry attempt ran — test is vacuous")
+    assert(expected.nonEmpty)
+    assert(got == expected)
+    assert(rows(faulty.index) == rows(clean.index))
+    val resumed = Dedup.resumeStreamingDedup(spark, dir, "doc_id", "text", 0.8)
+    assert(sortedRows(resumed.ingestOnce(0L, batch)) == expected)
+    assert(rows(resumed.index) == rows(clean.index))
+  }
+
+  test("StreamingVecDedup.ingestOnce survives first-attempt task loss without a double fold") {
+    import spark.implicits._
+    def vec(theta: Double) =
+      Array(math.cos(theta).toFloat, math.sin(theta).toFloat, 0.0f)
+    val base = Similarity.buildEmbeddingIndex(
+      Seq((1L, vec(0.0)), (2L, vec(1.5)), (3L, vec(3.0))).toDF("vec_id", "embedding"),
+      "vec_id", "embedding", nPlanes = 2, nTables = 16)
+    val batch = Seq((10L, vec(0.05)), (11L, vec(1.5)), (12L, vec(1.52)),
+      (13L, vec(4.2))).toDF("vec_id", "embedding")
+    def rows(ix: Similarity.EmbeddingIndex) =
+      Seq(ix.buckets, ix.repVecs, ix.members).map(_.count())
+    val clean = new Similarity.StreamingVecDedup(base, tmpDir("graft_ft_vclean"),
+      compactEvery = 1, "vec_id", "embedding", 0.95)
+    val expected = sortedRows(clean.ingestOnce(0L, batch))
+    val faults = spark.sparkContext.longAccumulator("injected_faults_vonce")
+    val dir = tmpDir("graft_ft_vfaulty")
+    val faulty = new Similarity.StreamingVecDedup(base, dir, compactEvery = 1,
+      "vec_id", "embedding", 0.95)
+    val got = sortedRows(faulty.ingestOnce(0L, faultingCopy(batch, faults)))
+    assert(faults.value > 0, "no retry attempt ran — test is vacuous")
+    assert(expected.nonEmpty)
+    assert(got == expected)
+    assert(rows(faulty.index) == rows(clean.index))
+    val resumed = Similarity.resumeStreamingVecDedup(spark, dir,
+      "vec_id", "embedding", 0.95)
+    assert(sortedRows(resumed.ingestOnce(0L, batch)) == expected)
+    assert(rows(resumed.index) == rows(clean.index))
   }
 
   /** A copy of `df` whose scan throws on the first attempt of partition

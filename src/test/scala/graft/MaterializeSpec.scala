@@ -70,4 +70,28 @@ class MaterializeSpec extends SparkSpec {
     assert(after == before,
       "recompute after block loss changed rows/__pid — range boundaries re-sampled")
   }
+
+  test("every pin in src/main goes through Materialize") {
+    // the design rule in code: a direct localCheckpoint / checkpoint /
+    // persist call elsewhere picks one pin for every master, skipping
+    // the cluster legs above. Comment lines are not call sites.
+    val Call = """\.(localCheckpoint|checkpoint|persist)\(""".r
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap(f =>
+        if (f.isDirectory) scalaFiles(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val seam = new java.io.File("src/main/scala/graft/ops/Materialize.scala")
+    val files = scalaFiles(new java.io.File("src/main/scala"))
+    assert(files.contains(seam), "scan did not reach ops/Materialize.scala")
+    val hits = files.filterNot(_ == seam).flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.getLines().zipWithIndex.collect {
+        case (line, i) if !line.trim.startsWith("*") && !line.trim.startsWith("/*") &&
+            Call.findFirstIn(line.split("//", 2)(0)).isDefined =>
+          s"${f.getPath}:${i + 1}: ${line.trim}"
+      }.toList
+      finally src.close()
+    }
+    assert(hits.isEmpty, s"pins outside Materialize:\n${hits.mkString("\n")}")
+  }
 }

@@ -674,6 +674,28 @@ class OpsSpec extends SparkSpec {
     intercept[IllegalArgumentException] { s2.ingestOnce(0L, b1) }
   }
 
+  test("vec ingestOnce: a replay with no stored pairs answers in the loop's pair schema") {
+    // the vector side of the empty-replay contract (see the text case
+    // in StreamingCurationSpec): same columns and types as ingest
+    def vec(theta: Double) =
+      Array(math.cos(theta).toFloat, math.sin(theta).toFloat, 0.0f)
+    def ix = Similarity.buildEmbeddingIndex(
+      Seq((1L, vec(0.0))).toDF("vec_id", "embedding"),
+      "vec_id", "embedding", nPlanes = 2, nTables = 16)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_vecix_empty").toString
+    val b0 = Seq((10L, vec(0.05))).toDF("vec_id", "embedding")
+    val replayed = new Similarity.StreamingVecDedup(ix, tmp, compactEvery = 1,
+      "vec_id", "embedding", threshold = 0.95, resumeBatchId = 0L)
+      .ingestOnce(0L, b0)
+    val live = new Similarity.StreamingVecDedup(ix, tmp, compactEvery = 1,
+      "vec_id", "embedding", threshold = 0.95).ingest(b0)
+    def cols(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.map(f => f.name -> f.dataType).toSeq
+    assert(cols(replayed) === cols(live))
+    assert(replayed.count() === 0)
+    assert(live.count() === 1)
+  }
+
   test("StreamingVecDedup drives from foreachBatch over a real stream") {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

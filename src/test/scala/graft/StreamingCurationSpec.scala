@@ -315,6 +315,27 @@ class StreamingCurationSpec extends SparkSpec {
     assert((p1 ++ p2).sorted === want)
   }
 
+  test("ingestOnce: a replay with no stored pairs answers in the loop's pair schema") {
+    // a loop resumed at batch 0 with no stored pairs (the public
+    // constructor's resumeBatchId >= 0, resumePairs = None) answers the
+    // replay with an empty frame — it must carry the same columns and
+    // types as ingest's output, or a sink writing both breaks. Stored
+    // replays read back from parquet are all-nullable, so nullability
+    // is not part of the contract.
+    def empty = Dedup.buildDedupIndex(Seq.empty[(Long, String)].toDF("doc_id", "text"),
+      "doc_id", "text")
+    val tmp = java.nio.file.Files.createTempDirectory("graft_once_empty").toString
+    val b0 = Seq((1L, t1), (2L, t1near)).toDF("doc_id", "text")
+    val replayed = new Dedup.StreamingDedup(empty, tmp, compactEvery = 1,
+      "doc_id", "text", threshold = 0.8, resumeBatchId = 0L).ingestOnce(0L, b0)
+    val live = new Dedup.StreamingDedup(empty, tmp, compactEvery = 1,
+      "doc_id", "text", threshold = 0.8).ingest(b0)
+    def cols(df: DataFrame) = df.schema.fields.map(f => f.name -> f.dataType).toSeq
+    assert(cols(replayed) === cols(live))
+    assert(replayed.count() === 0)
+    assert(live.count() === 1)
+  }
+
   test("mid-stream LM refresh: model swap changes the gate, pair invariant holds") {
     // the train-once/swap-nightly shape: early triggers gate under
     // model A, a reload swaps in model B (retrained on the GROWN
