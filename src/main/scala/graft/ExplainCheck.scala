@@ -8,10 +8,11 @@ package graft
   */
 object ExplainCheck {
   def main(args: Array[String]): Unit = {
+    val query = SparkEntry.select(Seq(args(0))).head._2
     val spark = Session.builder("8").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    SparkEntry.queries(args(0))(spark, dir).explain("formatted")
+    query(spark, dir).explain("formatted")
     spark.stop()
   }
 }

@@ -1,0 +1,94 @@
+package org.apache.spark {
+
+  /** The listener-bus wait behind [[graft.Profile.drain]]: Spark keeps
+    * its bus package-private. */
+  object GraftListenerBus {
+    def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(30000L)
+  }
+}
+
+package graft {
+
+  import java.util.Locale
+  import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+  import org.apache.spark.SparkContext
+  import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+  import scala.jdk.CollectionConverters._
+
+  /** The stage profiler of the dev tools (TimeOne, ScaleSmoke). It
+    * records every task and stage the context finishes and renders them
+    * as one `PROFILE {…}` JSON line per region: per stage its id, its
+    * name (the first `graft.` frame of its call site, else Spark's short
+    * name), task count, p50 / max / total task ms, input, shuffle-read
+    * and shuffle-write MB, and its span in ms from the region's first
+    * submission; then the total inter-stage gap, time no stage ran
+    * (driver planning, broadcast builds, pin bookkeeping, which task ms
+    * cannot see), and the wall from first submission to last completion.
+    *
+    * It listens on `sc` from construction until `detach()`. Per region:
+    * `reset()`, run, `drain()`, read. Events arrive on an asynchronous
+    * bus: an action returning does not mean its task-end events have
+    * been delivered.
+    */
+  private[graft] final class Profile(sc: SparkContext) extends SparkListener {
+    private case class Task(stage: Int, ms: Long, input: Long, shufRead: Long, shufWrite: Long)
+    private val tasks = new ConcurrentLinkedQueue[Task]()
+    // stage id -> (name, submission ms, completion ms)
+    private val stages = new ConcurrentHashMap[Int, (String, Long, Long)]()
+    sc.addSparkListener(this) // after the fields: events may arrive at once
+
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+      if (t.taskInfo != null && t.taskMetrics != null) {
+        val m = t.taskMetrics
+        tasks.add(Task(t.stageId, t.taskInfo.duration, m.inputMetrics.bytesRead,
+          m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten))
+      }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val i = e.stageInfo
+      val name = i.details.linesIterator.map(_.trim).find(_.startsWith("graft."))
+        .getOrElse(i.name.takeWhile(_ != '\n'))
+      val end = i.completionTime.getOrElse(System.currentTimeMillis())
+      stages.put(i.stageId, (name, i.submissionTime.getOrElse(end), end))
+    }
+
+    def detach(): Unit = sc.removeSparkListener(this)
+
+    def reset(): Unit = { tasks.clear(); stages.clear() }
+
+    /** Wait until every event posted so far has reached this listener. */
+    def drain(): Unit = org.apache.spark.GraftListenerBus.drain(sc)
+
+    def tasksSeen: Int = tasks.size
+
+    private def p50Max(ts: Iterable[Task]): (Long, Long) = {
+      val ms = ts.map(_.ms).toArray.sorted
+      if (ms.isEmpty) (0L, 0L) else (ms(ms.length / 2), ms.last)
+    }
+
+    /** p50 and max task ms over every task since the last reset. */
+    def taskMs: (Long, Long) = p50Max(tasks.asScala)
+
+    def shuffleWriteMb: Double = tasks.asScala.map(_.shufWrite).sum / 1e6
+
+    def line(region: String): String = {
+      def mb(bytes: Seq[Long]) = "%.3f".formatLocal(Locale.ROOT, bytes.sum / 1e6)
+      val byStage = tasks.asScala.toSeq.groupBy(_.stage)
+      val ss = stages.asScala.toSeq.sortBy { case (id, (_, start, _)) => (start, id) }
+      val t0 = ss.headOption.fold(0L) { case (_, (_, start, _)) => start }
+      var (prevEnd, gap) = (t0, 0L)
+      val rows = ss.map { case (id, (name, start, end)) =>
+        gap += math.max(0L, start - prevEnd)
+        prevEnd = math.max(prevEnd, end)
+        val ts = byStage.getOrElse(id, Nil)
+        val (p50, max) = p50Max(ts)
+        s"""{"id":$id,"name":${SparkEntry.jsonString(name)},"tasks":${ts.size},""" +
+          s""""p50_ms":$p50,"max_ms":$max,"total_ms":${ts.map(_.ms).sum},""" +
+          s""""input_mb":${mb(ts.map(_.input))},"shuffle_read_mb":${mb(ts.map(_.shufRead))},""" +
+          s""""shuffle_write_mb":${mb(ts.map(_.shufWrite))},"start_ms":${start - t0},"end_ms":${end - t0}}"""
+      }
+      s"""PROFILE {"region":${SparkEntry.jsonString(region)},"gap_ms":$gap,""" +
+        s""""wall_ms":${prevEnd - t0},"stages":${rows.mkString("[", ",", "]")}}"""
+    }
+  }
+}

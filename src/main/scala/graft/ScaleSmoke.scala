@@ -817,48 +817,11 @@ object ScaleSmoke {
       ((System.nanoTime() - t0) / 1e9, n)
     }
 
-    // task-duration capture for the BIG run of every op: max/p50 task
-    // time is the skew witness — a key owning one giant partition
-    // shows up as spread, not necessarily as wall-clock (31 idle cores
-    // hide one hot task at this scale; they don't at cluster scale)
-    val taskDur =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Int, java.lang.Long)]()
-    val stageNames =
-      new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    // shuffle WRITE bytes per op: wall-clock on one box understates a
-    // shuffle-volume difference (local disk "shuffles" at NVMe speed;
-    // a cluster pays the network) — the candidates-then-recount rows'
-    // actual claim is volume, so record it directly
-    val shuffleBytes = new java.util.concurrent.atomic.LongAdder()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        if (t.taskInfo != null) taskDur.add((t.stageId, t.taskInfo.duration))
-        if (t.taskMetrics != null)
-          shuffleBytes.add(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      }
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        stageNames.put(sc.stageInfo.stageId, sc.stageInfo.name.takeWhile(_ != '\n'))
-    })
-    def spread(): (Long, Long) = {
-      val all = taskDur.toArray(Array.empty[(Int, java.lang.Long)])
-      val ds = all.map(_._2.toLong).sorted
-      if (ds.isEmpty) return (0L, 0L)
-      // per-stage attribution for the hot task, so a spread reading
-      // names its stage instead of leaving a 27-second mystery
-      if (sys.env.contains("SPARK_GRAFT_STAGE_SPREAD")) {
-        val byStage = all.groupBy(_._1).toSeq.map { case (sid, ts) =>
-          val d = ts.map(_._2.toLong).sorted
-          (sid, d.length, d(d.length / 2), d.last)
-        }.sortBy(-_._4).take(5)
-        byStage.foreach { case (sid, n, p50, mx) =>
-          println(f"    stage $sid%5d: $n%4d tasks  p50 $p50%6d ms  max $mx%6d ms" +
-            s"  ${stageNames.getOrDefault(sid, "?")}")
-        }
-      }
-      (ds(ds.length / 2), ds.last)
-    }
+    // the BIG run of every op is profiled. max/p50 task ms is the skew
+    // witness (31 idle cores hide one hot task here, a cluster doesn't);
+    // shuffle-write MB the volume witness (local disk "shuffles" at NVMe
+    // speed, a cluster pays the network)
+    val profile = new Profile(spark.sparkContext)
 
     // optional 4th arg: comma-separated op-name filter, for re-measuring
     // one op after a methodology change without the full suite
@@ -903,31 +866,14 @@ object ScaleSmoke {
       graft.ops.Materialize.releaseAll(spark)
       System.gc()
       Thread.sleep(1000)
-      // listener events arrive on the async bus: a job's count()
-      // returning does not mean its task-end events dispatched, so an
-      // immediate reset/read races base-run stragglers into the big
-      // run's figures (and misses the big run's tail). Poll until the
-      // counters stop moving before clearing or reading.
-      def quiesce(): Unit = {
-        var prev = (-1L, -1)
-        var cur = (shuffleBytes.sum(), taskDur.size())
-        var tries = 0
-        while (cur != prev && tries < 40) {
-          Thread.sleep(250)
-          prev = cur
-          cur = (shuffleBytes.sum(), taskDur.size())
-          tries += 1
-        }
-      }
       try {
         val (tBase, nBase) = time(fn(spark, base).count())
-        quiesce()
-        taskDur.clear()
-        shuffleBytes.reset()
+        profile.drain()
+        profile.reset()
         val (tBig, nBig) = time(fn(spark, out).count())
-        quiesce()
-        val (p50, tMax) = spread()
-        val shufMb = shuffleBytes.sum() / 1e6
+        profile.drain()
+        val (p50, tMax) = profile.taskMs
+        val shufMb = profile.shuffleWriteMb
         val ratio = tBig / tBase
         val b = bound(exponent)
         val ok = ratio <= b
@@ -935,6 +881,7 @@ object ScaleSmoke {
           f"x$reps: $tBig%7.2f s ($nBig rows)   ratio ${ratio}%.1fx " +
           f"(bound ${b}%.0fx ${if (ok) "OK" else "EXCEEDED"})   " +
           f"task p50/max ${p50}/${tMax} ms   shuffle ${shufMb}%.1f MB")
+        println(profile.line(name))
         f"""  "$name": {"base_sec": $tBase%.2f, "base_rows": $nBase, "big_sec": $tBig%.2f, "big_rows": $nBig, "ratio": $ratio%.2f, "bound": $b%.1f, "ok": $ok, "task_p50_ms": $p50, "task_max_ms": $tMax, "shuffle_mb": $shufMb%.1f}"""
       } catch {
         // one op blowing the single-box spill wall (the vector family's

@@ -23,4 +23,28 @@ object SparkEntry {
     */
   def oracleSql: Map[String, String] =
     CdcQueries.oracles ++ Analytics.oracles ++ LlmQueries.oracles
+
+  /** The `queries` entries named by `names`, in the caller's order. An
+    * unknown name throws IllegalArgumentException naming it, so a typo
+    * fails before a session starts instead of running a smaller set. */
+  def select(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty,
+      s"names not in SparkEntry.queries: ${unknown.distinct.mkString(", ")}")
+    names.distinct.map(n => n -> all(n))
+  }
+
+  /** A JSON string literal: backslash, quote and ALL control chars (<0x20)
+    * escaped — a tab or CR in builder-authored SQL would otherwise make the
+    * driver's json.load fail and silently zero the round's correctness. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

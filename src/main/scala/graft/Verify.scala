@@ -7,10 +7,8 @@ object Verify {
     // optional 3rd arg (dev only): comma-separated query subset
     val Array(sfDir, outDir) = args.take(2)
     val selected =
-      if (args.length > 2) {
-        val keep = args(2).split(",").toSet
-        SparkEntry.queries.view.filterKeys(keep).toMap
-      } else SparkEntry.queries
+      if (args.length > 2) SparkEntry.select(args(2).split(",").toSeq)
+      else SparkEntry.queries.toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Session.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -23,20 +21,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import SparkEntry.jsonString
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

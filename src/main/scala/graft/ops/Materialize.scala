@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** The ONE seam for correctness-load-bearing materialization.
@@ -123,20 +124,27 @@ object Materialize {
     * consumer has run — bounds the blocks held across a long sweep
     * (the 100× suite's driver-heap floor). Non-blocking: safe to call
     * opportunistically; a frame never released is reclaimed by the
-    * ContextCleaner when unreferenced.
+    * ContextCleaner when unreferenced. A local pin's checkpointed RDD
+    * (its `LogicalRDD` leaf) is unpersisted too: the frame's own
+    * unpersist never reaches it.
     */
-  def release(df: DataFrame): Unit = df.unpersist(blocking = false)
+  def release(df: DataFrame): Unit = {
+    df.unpersist(blocking = false)
+    df.queryExecution.logical match {
+      case pin: LogicalRDD => pin.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
+  }
 
-  /** Sweep hygiene: drop EVERY block the context still tracks —
-    * localCheckpoint blocks included, which `release` can't reach (the
-    * checkpointed DataFrame's unpersist doesn't touch the internal
-    * RDD). Between independent operations (the 100× suite's inter-op
-    * seam) this frees finished barriers deterministically instead of
-    * waiting for a driver GC to let the ContextCleaner notice them —
-    * in local mode those blocks live in the DRIVER's heap, which is
-    * where the r12 sweep's 96 GB floor came from. Do NOT call while
-    * frames from [[barrier]] are still in use: their blocks drop and,
-    * with lineage truncated, a later read fails.
+  /** Sweep hygiene: drop EVERY block the context still tracks — pins
+    * whose frames the caller no longer holds included, which `release`
+    * can't reach. Between independent operations (the 100× suite's
+    * inter-op seam) this frees finished barriers deterministically
+    * instead of waiting for a driver GC to let the ContextCleaner
+    * notice them — in local mode those blocks live in the DRIVER's
+    * heap, which is where the r12 sweep's 96 GB floor came from. Do NOT
+    * call while frames from [[barrier]] are still in use: their blocks
+    * drop and, with lineage truncated, a later read fails.
     */
   def releaseAll(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.getPersistentRDDs.values

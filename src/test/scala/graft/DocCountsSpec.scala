@@ -44,6 +44,15 @@ class DocCountsSpec extends AnyFunSuite {
     assert(missing.isEmpty, s"queries without oracle SQL: $missing")
   }
 
+  test("select keeps the caller's order and names every unknown query") {
+    val order = Seq("dedup_clusters", "dedup_exact", "cdc_asof_join")
+    assert(SparkEntry.select(order).map(_._1) == order)
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Seq("dedup_exact", "dedup_clustrs", "no_such_query")))
+    assert(e.getMessage.contains("dedup_clustrs") && e.getMessage.contains("no_such_query"),
+      e.getMessage)
+  }
+
   test("shared-oracle mode pairs keep IDENTICAL oracle SQL") {
     // these pairs are equivalence PROOFS: the scale mode is held to
     // the exact mode's oracle, so the driver gate itself certifies

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.Materialize
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -71,27 +72,55 @@ class MaterializeSpec extends SparkSpec {
       "recompute after block loss changed rows/__pid — range boundaries re-sampled")
   }
 
-  test("every pin in src/main goes through Materialize") {
-    // the design rule in code: a direct localCheckpoint / checkpoint /
-    // persist call elsewhere picks one pin for every master, skipping
-    // the cluster legs above. Comment lines are not call sites.
-    val Call = """\.(localCheckpoint|checkpoint|persist)\(""".r
+  test("release frees a local-leg pin's checkpointed RDD") {
+    // the local leg's frame is a LogicalRDD over a locally checkpointed
+    // RDD; unpersisting the frame alone leaves that RDD's blocks pinned
+    val m = Materialize.barrier((1 to 100).toDF("id").repartition(2))
+    val pin = m.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.id
+      case other => fail(s"local barrier leaf is not a LogicalRDD: $other")
+    }
+    assert(spark.sparkContext.getPersistentRDDs.contains(pin))
+    Materialize.release(m)
+    assert(!spark.sparkContext.getPersistentRDDs.contains(pin),
+      "release left the checkpointed RDD persisted")
+  }
+
+  /** Lines of src/main/scala matching `call` outside `seam`, skipping
+    * comment lines: comments are not call sites. */
+  private def callsOutside(call: scala.util.matching.Regex, seam: String): Seq[String] = {
     def scalaFiles(d: java.io.File): Seq[java.io.File] =
       Option(d.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap(f =>
         if (f.isDirectory) scalaFiles(f)
         else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
-    val seam = new java.io.File("src/main/scala/graft/ops/Materialize.scala")
+    val seamFile = new java.io.File(seam)
     val files = scalaFiles(new java.io.File("src/main/scala"))
-    assert(files.contains(seam), "scan did not reach ops/Materialize.scala")
-    val hits = files.filterNot(_ == seam).flatMap { f =>
+    assert(files.contains(seamFile), s"scan did not reach $seam")
+    files.filterNot(_ == seamFile).flatMap { f =>
       val src = scala.io.Source.fromFile(f, "UTF-8")
       try src.getLines().zipWithIndex.collect {
         case (line, i) if !line.trim.startsWith("*") && !line.trim.startsWith("/*") &&
-            Call.findFirstIn(line.split("//", 2)(0)).isDefined =>
+            call.findFirstIn(line.split("//", 2)(0)).isDefined =>
           s"${f.getPath}:${i + 1}: ${line.trim}"
       }.toList
       finally src.close()
     }
+  }
+
+  test("every pin in src/main goes through Materialize") {
+    // the design rule in code: a direct localCheckpoint / checkpoint /
+    // persist call elsewhere picks one pin for every master, skipping
+    // the cluster legs above
+    val hits = callsOutside("""\.(localCheckpoint|checkpoint|persist)\(""".r,
+      "src/main/scala/graft/ops/Materialize.scala")
     assert(hits.isEmpty, s"pins outside Materialize:\n${hits.mkString("\n")}")
+  }
+
+  test("every SparkListener in src/main is graft.Profile") {
+    // one profiler: a second hand-written listener brings back its own
+    // stage naming and its own wait for the asynchronous listener bus
+    val hits = callsOutside("""addSparkListener\(|extends SparkListener\b""".r,
+      "src/main/scala/graft/Profile.scala")
+    assert(hits.isEmpty, s"listeners outside Profile:\n${hits.mkString("\n")}")
   }
 }
