@@ -11,15 +11,21 @@ package graft {
 
   import java.util.Locale
   import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+  import java.util.concurrent.atomic.AtomicInteger
   import org.apache.spark.SparkContext
-  import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+  import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+    SparkListenerStageCompleted, SparkListenerTaskEnd}
+  import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   import scala.jdk.CollectionConverters._
 
   /** The stage profiler of the dev tools (TimeOne, ScaleSmoke). It
     * records every task and stage the context finishes and renders them
-    * as one `PROFILE {…}` JSON line per region: per stage its id, its
-    * name (the first `graft.` frame of its call site, else Spark's short
-    * name), task count, p50 / max / total task ms, input, shuffle-read
+    * as one `PROFILE {…}` JSON line per region: the number of jobs;
+    * per stage its id, its name (the first `graft.` frame of its call
+    * site, else of the call site of the SQL execution its job belongs
+    * to — adaptive execution submits query stages from a pool thread
+    * whose own stack names no operator — else Spark's short name),
+    * task count, p50 / max / total task ms, input, shuffle-read
     * and shuffle-write MB, and its span in ms from the region's first
     * submission; then the total inter-stage gap, time no stage ran
     * (driver planning, broadcast builds, pin bookkeeping, which task ms
@@ -35,6 +41,10 @@ package graft {
     private val tasks = new ConcurrentLinkedQueue[Task]()
     // stage id -> (name, submission ms, completion ms)
     private val stages = new ConcurrentHashMap[Int, (String, Long, Long)]()
+    // SQL execution id -> first graft. frame of its call site; stage id -> it
+    private val execNames = new ConcurrentHashMap[Long, String]()
+    private val stageExecNames = new ConcurrentHashMap[Int, String]()
+    private val jobs = new AtomicInteger()
     sc.addSparkListener(this) // after the fields: events may arrive at once
 
     override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
@@ -44,9 +54,27 @@ package graft {
           m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten))
       }
 
+    private def graftFrame(callSite: String): Option[String] =
+      callSite.linesIterator.map(_.trim).find(_.startsWith("graft."))
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        graftFrame(s.details).foreach(execNames.put(s.executionId, _))
+      case _ => ()
+    }
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      jobs.incrementAndGet()
+      for {
+        props <- Option(e.properties)
+        id <- Option(props.getProperty("spark.sql.execution.id"))
+        name <- Option(execNames.get(id.toLong))
+      } e.stageIds.foreach(stageExecNames.put(_, name))
+    }
+
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
       val i = e.stageInfo
-      val name = i.details.linesIterator.map(_.trim).find(_.startsWith("graft."))
+      val name = graftFrame(i.details).orElse(Option(stageExecNames.get(i.stageId)))
         .getOrElse(i.name.takeWhile(_ != '\n'))
       val end = i.completionTime.getOrElse(System.currentTimeMillis())
       stages.put(i.stageId, (name, i.submissionTime.getOrElse(end), end))
@@ -54,12 +82,17 @@ package graft {
 
     def detach(): Unit = sc.removeSparkListener(this)
 
-    def reset(): Unit = { tasks.clear(); stages.clear() }
+    def reset(): Unit = {
+      tasks.clear(); stages.clear(); execNames.clear(); stageExecNames.clear(); jobs.set(0)
+    }
 
     /** Wait until every event posted so far has reached this listener. */
     def drain(): Unit = org.apache.spark.GraftListenerBus.drain(sc)
 
     def tasksSeen: Int = tasks.size
+
+    /** Jobs started since the last reset. */
+    def jobsSeen: Int = jobs.get
 
     private def p50Max(ts: Iterable[Task]): (Long, Long) = {
       val ms = ts.map(_.ms).toArray.sorted
@@ -87,7 +120,7 @@ package graft {
           s""""input_mb":${mb(ts.map(_.input))},"shuffle_read_mb":${mb(ts.map(_.shufRead))},""" +
           s""""shuffle_write_mb":${mb(ts.map(_.shufWrite))},"start_ms":${start - t0},"end_ms":${end - t0}}"""
       }
-      s"""PROFILE {"region":${SparkEntry.jsonString(region)},"gap_ms":$gap,""" +
+      s"""PROFILE {"region":${SparkEntry.jsonString(region)},"jobs":$jobsSeen,"gap_ms":$gap,""" +
         s""""wall_ms":${prevEnd - t0},"stages":${rows.mkString("[", ",", "]")}}"""
     }
   }

@@ -353,14 +353,16 @@ object Dedup {
   def jaccardFromShingles(sh: DataFrame, id: String, pairs: DataFrame): DataFrame = {
     val sizes = sh.groupBy(col(id)).agg(count(lit(1)).as("n"))
     // no broadcast hint: candidate-pair cardinality is bounded only by
-    // LSH bucket occupancy, so let AQE broadcast when actually small
-    val inter = pairs
-      .join(sh.select(col(id).as("id_a"), col("shingle")), "id_a")
-      .join(sh.select(col(id).as("id_b"), col("shingle")), Seq("id_b", "shingle"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_inter"))
+    // LSH bucket occupancy, so let AQE broadcast when actually small.
+    // ONE read of `pairs`: each pair meets its id_a's shingles, and a
+    // LEFT join on id_b's counts the shared ones (0 when none), so a
+    // pair without overlap keeps its row; a pair whose id has no
+    // shingles drops at the size joins below
+    val hits = sh.select(col(id).as("id_b"), col("shingle"), lit(1).as("__hit"))
     pairs
-      .join(inter, Seq("id_a", "id_b"), "left")
-      .na.fill(0L, Seq("n_inter"))
+      .join(sh.select(col(id).as("id_a"), col("shingle")), "id_a")
+      .join(hits, Seq("id_b", "shingle"), "left")
+      .groupBy(pairs.columns.map(col): _*).agg(count(col("__hit")).as("n_inter"))
       .join(sizes.select(col(id).as("id_a"), col("n").as("n_a")), "id_a")
       .join(sizes.select(col(id).as("id_b"), col("n").as("n_b")), "id_b")
       .withColumn("jaccard",
@@ -478,13 +480,20 @@ object Dedup {
     * that is the OUTPUT's own cardinality (every identical pair is a
     * dup pair), not candidate work; a 100 TB consumer that only needs
     * the verdict should read [[exactMembership]] + rep pairs instead.
+    * `id_a` expands through `members`, `id_b` through `membersB` (the
+    * incremental probe's `id_b` may be an index representative); the
+    * intra-group pairs are `members`' own. The lookups into `members`
+    * read one rep-keyed projection, so adaptive execution builds its
+    * broadcast once and reuses it.
     */
   private def expandVerified(repPairs: DataFrame, members: DataFrame,
-      repSizes: DataFrame, id: String): DataFrame = {
+      repSizes: DataFrame, id: String, membersB: Option[DataFrame] = None): DataFrame = {
+    def byRep(m: DataFrame, rep: String, doc: String) =
+      m.select(col("rep_id").as(rep), col(id).as(doc))
     val swapped = col("__ma") > col("__mb")
     val cross = repPairs
-      .join(members.select(col("rep_id").as("id_a"), col(id).as("__ma")), "id_a")
-      .join(members.select(col("rep_id").as("id_b"), col(id).as("__mb")), "id_b")
+      .join(byRep(members, "id_a", "__ma"), "id_a")
+      .join(byRep(membersB.getOrElse(members), "id_b", "__mb"), "id_b")
       .select(
         least(col("__ma"), col("__mb")).as("id_a"),
         greatest(col("__ma"), col("__mb")).as("id_b"),
@@ -492,11 +501,10 @@ object Dedup {
         when(swapped, col("n_b")).otherwise(col("n_a")).as("n_a"),
         when(swapped, col("n_a")).otherwise(col("n_b")).as("n_b"),
         col("n_inter"), col("jaccard"))
-    val m = members.select(col("rep_id"), col(id))
-    val intra = m.select(col("rep_id"), col(id).as("id_a"))
-      .join(m.select(col("rep_id"), col(id).as("id_b")), "rep_id")
+    val intra = byRep(members, "__r", "id_a")
+      .join(byRep(members, "__r", "id_b"), "__r")
       .filter(col("id_a") < col("id_b"))
-      .join(repSizes, "rep_id")
+      .join(repSizes.withColumnRenamed("rep_id", "__r"), "__r")
       .select(col("id_a"), col("id_b"), col("n").as("n_a"),
         col("n").as("n_b"), col("n").as("n_inter"), lit(1.0).as("jaccard"))
     cross.unionByName(intra)
@@ -520,14 +528,11 @@ object Dedup {
     // concurrently (one job latency, not two).
     val Seq(members, sh) = Materialize.barrierAll(Seq(
       membersRaw, shingleHashes(repDocs, id, text, k)))
-    // the candidate-pair frame is read TWICE by jaccardFromShingles
-    // (the intersection derivation and the outer left join) — unpinned,
-    // the minhash + LSH band self-join + distinct re-ran per read (the
-    // r16 twin-stage audit signature). Two ids per row, the leaf-pin
-    // rule's win side.
-    val cands = Materialize.barrier(
-      lshCandidates(minhashFromShingles(sh, id, numHashes), id,
-        bands, numHashes / bands, maxBucketSize))
+    // not pinned: jaccardFromShingles reads the candidate pairs once,
+    // so the minhash + LSH band self-join + distinct run once inside
+    // the verify's own job
+    val cands = lshCandidates(minhashFromShingles(sh, id, numHashes), id,
+      bands, numHashes / bands, maxBucketSize)
     val repPairs = jaccardFromShingles(sh, id, cands)
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "n_a", "n_b", "n_inter", "jaccard")
@@ -943,56 +948,71 @@ object Dedup {
   /** Shared probe core: (pairs touching the batch, the batch's own
     * index artifacts) — [[probeAndExtend]] reuses the artifacts so the
     * streaming loop never computes a batch twice.
+    *
+    * One collapse + shingle pass and ONE MinHash pass over the batch
+    * (the batch's band frame, pinned: it is also the index arm the
+    * batch folds in), ONE candidate pin holding both the new-vs-new
+    * pairs (the band self-join, `id_a < id_b`, exactly
+    * [[lshCandidates]]' uncapped join) and the probe pairs (the bands ⋈
+    * the index's bands), and ONE verify over the batch ∪ touched-index
+    * shingle frame. Ids are disjoint between batch and index, and that
+    * frame holds every shingle of every doc it holds, so each pair's
+    * sizes, intersection and Jaccard are those of a verify over the
+    * batch's frame alone. Every pin carries its measured size, so the
+    * joins over these small frames plan as broadcasts.
     */
   private def incrementalCore(newDocs: DataFrame, index: DedupIndex,
       id: String, text: String, threshold: Double,
       numHashes: Int, bands: Int, k: Int): (DataFrame, DedupIndex) = {
     requireSameBanding(index, numHashes, bands, k, "probe")
-    // ONE collapse + shingle + signature pass over the batch, shared by
-    // the new-vs-new pipeline and the index probe
-    val (members, shNew, repPairsNew) = repDupPairs(newDocs, id, text,
-      threshold, numHashes, bands, Int.MaxValue, k)
-    val repSizes = shNew.groupBy(col(id)).agg(count(lit(1)).as("n"))
-      .select(col(id).as("rep_id"), col("n"))
-    val newVsNew = expandVerified(repPairsNew, members, repSizes, id)
-
-    // checkpointed so a growing extended index holds MATERIALIZED band
-    // arms — later probes reuse them instead of re-deriving N batches
+    // a batch is small by contract: ONE pin holds its rows with their
+    // representative (the min id among md5-identical normalized texts,
+    // the collapseExact rule), so the caller's batch plan (a gated
+    // batch's filter and scoring jobs) runs once. collapseExact's shape
+    // (a text-free fingerprint pin, then the membership and shingle
+    // pins each reading `docs` again) keeps corpus text out of pins at
+    // corpus scale, but here it ran the batch plan twice
+    val batch = Materialize.barrier(
+      newDocs.filter(col(id).isNotNull && col(text).isNotNull)
+        .select(col(id), col(text),
+          min(col(id)).over(Window.partitionBy(md5(norm(col(text))))).as("rep_id")))
+    val members = batch.select(col(id), col("rep_id"))
+    val shNew = Materialize.barrier(
+      shingleHashes(batch.filter(col(id) === col("rep_id")), id, text, k))
+    // pinned: read by both candidate arms, and the index arm the batch
+    // folds in (later probes read it as stored blocks)
     val newBands = Materialize.barrier(
       bandFrame(minhashFromShingles(shNew, id, numHashes),
         id, bands, numHashes / bands))
-    // pinned (r16): read three times — the touched-rep semi join and
-    // jaccardFromShingles' two pair reads — and each unpinned read
-    // re-ran the batch-vs-index band join + distinct
+    def side(bs: DataFrame, as: String) =
+      bs.select(col("band_id"), col("bucket"), col(id).as(as))
+    val newVsNew = side(newBands, "id_a").join(side(newBands, "id_b"), Seq("band_id", "bucket"))
+      .filter(col("id_a") < col("id_b"))
+    val probe = side(newBands, "id_a").join(side(index.bands, "id_b"), Seq("band_id", "bucket"))
+    // pinned: read twice, by the touched-rep semi join and the verify
     val cands = Materialize.barrier(
-      newBands.select(col("band_id"), col("bucket"), col(id).as("id_a"))
-        .join(index.bands.select(col("band_id"), col("bucket"), col(id).as("id_b")),
-          Seq("band_id", "bucket"))
-        .select("id_a", "id_b").distinct())
+      newVsNew.select("id_a", "id_b").union(probe.select("id_a", "id_b")).distinct())
     // verification reads only the TOUCHED index representatives — the
     // semi-join keeps per-run cost proportional to the probe, not the
     // corpus (sizes stay exact: all shingles of a kept doc survive)
     val touched = index.shingles
-      .join(cands.select(col("id_b").as(id)).distinct(), Seq(id), "left_semi")
+      .join(cands.select(col("id_b").as(id)), Seq(id), "left_semi")
     // the verify shingle frame (batch ∪ touched reps) is read three
     // times inside jaccardFromShingles (sizes + both intersection
     // joins) — pin the union once; its size is probe-proportional
     val shVerify = Materialize.barrier(shNew.unionByName(touched))
     val repPairs = jaccardFromShingles(shVerify, id, cands)
       .filter(col("jaccard") >= threshold)
+      .select("id_a", "id_b", "n_a", "n_b", "n_inter", "jaccard")
     // expand BOTH reps to their identical members (same shingle set ⇒
-    // same stats), re-orienting id_a < id_b with the stats following
-    val swapped = col("__ma") > col("__mb")
-    val expanded = repPairs
-      .join(members.select(col("rep_id").as("id_a"), col(id).as("__ma")), "id_a")
-      .join(index.members.select(col("rep_id").as("id_b"), col(id).as("__mb")), "id_b")
-      .select(
-        least(col("__ma"), col("__mb")).as("id_a"),
-        greatest(col("__ma"), col("__mb")).as("id_b"),
-        when(swapped, col("n_b")).otherwise(col("n_a")).as("n_a"),
-        when(swapped, col("n_a")).otherwise(col("n_b")).as("n_b"),
-        col("n_inter"), col("jaccard"))
-    (newVsNew.unionByName(expanded),
+    // same stats): `id_a` is always a batch rep, `id_b` a batch or an
+    // index rep; the intra-group pairs are the batch's own
+    // (the batch reps' sizes, over shVerify like the verify's own
+    // sizes: the same aggregate, so adaptive execution reuses its stage)
+    val repSizes = shVerify.groupBy(col(id)).agg(count(lit(1)).as("n"))
+      .select(col(id).as("rep_id"), col("n"))
+    (expandVerified(repPairs, members, repSizes, id,
+      Some(members.unionByName(index.members))),
       DedupIndex(newBands, shNew, members, numHashes, bands, k))
   }
 
@@ -1122,10 +1142,8 @@ object Dedup {
       .join(sig.select(col(id).as("id_b"), col("simhash").as("sim_b")), "id_b")
       .filter(ham(maxHamming))
       .select("id_a", "id_b")
-    // pinned like repDupPairs' candidate frame: jaccardFromShingles
-    // reads it twice, and each unpinned read re-ran BOTH ensemble arms
-    // (the simhash band self-join and the minhash-LSH tail)
-    val cands = Materialize.barrier(bandCands.union(lshTail).distinct())
+    // not pinned: jaccardFromShingles reads the candidate pairs once
+    val cands = bandCands.union(lshTail).distinct()
     val repPairs = jaccardFromShingles(sh, id, cands)
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "n_a", "n_b", "n_inter", "jaccard")

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.Materialize
+import org.apache.spark.sql.GraftPin
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -84,6 +85,75 @@ class MaterializeSpec extends SparkSpec {
     Materialize.release(m)
     assert(!spark.sparkContext.getPersistentRDDs.contains(pin),
       "release left the checkpointed RDD persisted")
+  }
+
+  /** Jobs started while `body` runs, counted by [[Profile]]. */
+  private def jobsOf(body: => Unit): Int = {
+    val p = new Profile(spark.sparkContext)
+    try { p.drain(); p.reset(); body; p.drain(); p.jobsSeen }
+    finally p.detach()
+  }
+
+  /** A text-heavy pinned join result: the optimizer's estimate before
+    * the pin is the product of both sides' sizes. `salt` keeps the
+    * plans of two calls apart, so the persist leg's cache never serves
+    * one call from the other's blocks. */
+  private def textJoin(salt: Int) = {
+    val docs = (1 to 400).map(i => (i.toLong, s"doc $i $salt " + "lorem ipsum dolor sit " * 25))
+      .toDF("id", "text")
+    val keys = (1 to 400).map(i => (i.toLong, i % 7 + salt)).toDF("id", "k")
+    docs.join(keys, "id").repartition(3)
+  }
+
+  /** The reliable leg needs a checkpoint dir on the shared context; the
+    * local master keeps picking the local leg with one set. */
+  private lazy val checkpointDir = {
+    val d = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    spark.sparkContext.setCheckpointDir(d)
+    d
+  }
+
+  test("each leg's pin carries its measured row count and stored size") {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+    checkpointDir
+    // (leg, pin, share of the UnsafeRow bytes the leg stores at least):
+    // the checkpoint legs store the UnsafeRows themselves; the persist
+    // leg stores columnar batches, whose strings carry no 8-byte
+    // offset-and-length word, and Spark's InMemoryRelation reports
+    // their size (measured: 97% of the UnsafeRow bytes on this frame)
+    val legs = Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame, Double)](
+      ("local", Materialize.barrier(_), 1.0),
+      ("reliable", GraftPin.checkpoint(_, reliable = true, eager = true).measured, 1.0),
+      ("cluster", Materialize.clusterBarrier(_), 0.9))
+    for (((leg, pin, share), salt) <- legs.zipWithIndex) {
+      val m = pin(textJoin(salt))
+      val stats = m.queryExecution.optimizedPlan.stats
+      val rows = m.count()
+      val unsafeBytes = m.queryExecution.toRdd
+        .map(_.asInstanceOf[UnsafeRow].getSizeInBytes.toLong).sum().toLong
+      assert(stats.rowCount.contains(BigInt(rows)), s"$leg: $stats vs $rows rows")
+      // the text is the bulk of every row, so a rows × per-type-default
+      // size would fall far below the stored bytes
+      assert(unsafeBytes > rows * 500, s"$leg: the frame is not text-heavy")
+      assert(stats.sizeInBytes.toDouble >= unsafeBytes * share &&
+        stats.sizeInBytes <= unsafeBytes * 2,
+        s"$leg: sizeInBytes ${stats.sizeInBytes} vs $unsafeBytes stored UnsafeRow bytes")
+      Materialize.release(m)
+    }
+  }
+
+  test("a measured pin launches no more jobs than Spark's own pin") {
+    checkpointDir
+    def frame(salt: Int) = (1 to 2000).toDF("id")
+      .groupBy((col("id") % (37 + salt)).as("k")).agg(count(lit(1)).as("n"))
+    assert(jobsOf(Materialize.barrier(frame(0))) ===
+      jobsOf(frame(1).localCheckpoint(eager = true)))
+    assert(jobsOf(GraftPin.checkpoint(frame(2), reliable = true, eager = true).measured) ===
+      jobsOf(frame(3).checkpoint(eager = true)))
+    assert(jobsOf(Materialize.barrierAgg(frame(4), sum("n"))) ===
+      jobsOf(frame(5).localCheckpoint(eager = false).agg(sum("n")).collect()))
+    assert(jobsOf(Materialize.clusterBarrier(frame(6))) ===
+      jobsOf(frame(7).persist(StorageLevel.DISK_ONLY_2).count()))
   }
 
   /** Lines of src/main/scala matching `call` outside `seam`, skipping

@@ -118,9 +118,13 @@ class OpsSpec extends SparkSpec {
     val corpus = all.filter(col("doc_id") % 2 === 1)
     val newBatch = all.filter(col("doc_id") % 2 === 0)
     val index = Dedup.buildDedupIndex(corpus, "doc_id", "text")
+    // every pair column: the set sizes and the intersection must follow
+    // their ids through the expansion, not only the Jaccard
     def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.select("id_a", "id_b", "jaccard").orderBy("id_a", "id_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e9))).toSeq
+      df.select("id_a", "id_b", "jaccard", "n_a", "n_b", "n_inter")
+        .orderBy("id_a", "id_b").collect()
+        .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e9),
+          (r.getLong(3), r.getLong(4), r.getLong(5)))).toSeq
 
     val inc = pairs(Dedup.incrementalDupPairs(newBatch, index,
       "doc_id", "text", threshold = 0.5))
@@ -129,7 +133,7 @@ class OpsSpec extends SparkSpec {
     assert(inc == full)
     assert(inc.nonEmpty)
     // exact new-vs-corpus dup found at jaccard 1 through the index
-    assert(inc.contains((1L, 2L, 1000000000L)))
+    assert(inc.exists(p => (p._1, p._2, p._3) == (1L, 2L, 1000000000L)))
     // corpus-vs-corpus pairs are NOT recomputed
     assert(!inc.exists(p => p._1 % 2 == 1 && p._2 % 2 == 1))
   }
@@ -143,13 +147,20 @@ class OpsSpec extends SparkSpec {
     // threshold keeps (not only identical J=1 pairs)
     val s1 = "the quick brown fox jumps over the lazy dog near the river"
     val s4 = "the quick brown fox leaps over the lazy dog near the river"
+    val s7 = "the quick brown fox jumps over the lazy cat near the river"
+    val s9 = "the quick brown fox jumps over the lazy cat near the lake"
     val batches = Seq(
       Seq((1L, s1),
         (3L, "completely different content about spark engines and shuffles")),
       Seq((2L, s1), // exact dup of b1's 1
         (4L, s4)), // near dup of 1 (cross-batch, sub-1.0)
       Seq((5L, s1), // dup of 1 AND 2
-        (6L, "totally novel text with no relatives anywhere here"))
+        (6L, "totally novel text with no relatives anywhere here")),
+      // all three expansions in one batch: 7 and 8 are identical (an
+      // intra-group pair), both near-dup the index's 1, 2 and 5 (probe
+      // pairs, J = 7/13), and 9 near-dups them inside the batch (a
+      // new-vs-new pair, J = 9/11, whose id_b expands through the batch)
+      Seq((7L, s7), (8L, s7), (9L, s9))
     ).map(_.toDF("doc_id", "text"))
     var index = Dedup.buildDedupIndex(batches.head, "doc_id", "text")
     val perBatch = batches.tail.map { b =>
@@ -159,8 +170,9 @@ class OpsSpec extends SparkSpec {
       pairs
     }
     def normPairs(df: org.apache.spark.sql.DataFrame) =
-      df.select("id_a", "id_b", "jaccard").collect()
-        .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e9)))
+      df.select("id_a", "id_b", "jaccard", "n_a", "n_b", "n_inter").collect()
+        .map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 1e9),
+          (r.getLong(3), r.getLong(4), r.getLong(5))))
         .sorted.toSeq
     val streamed = normPairs(perBatch.reduce(_ unionByName _))
     val full = normPairs(Dedup.verifiedDupPairs(
@@ -169,12 +181,19 @@ class OpsSpec extends SparkSpec {
       // index build, not the incremental stream
       .filter(!(col("id_a").isin(1L, 3L) && col("id_b").isin(1L, 3L))))
     assert(streamed == full)
-    assert(streamed.exists(p => p._1 == 1L && p._2 == 5L && p._3 == 1000000000L))
+    def j(a: Long, b: Long) = streamed.find(p => p._1 == a && p._2 == b).map(_._3)
+    assert(j(1L, 5L).contains(1000000000L))
     // the cross-batch NEAR dup survives with its exact sub-1.0 jaccard
     // (7/13): a broken index-probe leg could pass on J=1 pairs alone
-    assert(streamed.contains((1L, 4L, math.round(7.0 / 13.0 * 1e9))))
-    assert(streamed.contains((4L, 5L, math.round(7.0 / 13.0 * 1e9)))) // later batch vs 4
-    assert(streamed.count { case (a, b, _) => Set(a, b).subsetOf(Set(1L, 2L, 5L)) } == 3)
+    assert(j(1L, 4L).contains(math.round(7.0 / 13.0 * 1e9)))
+    assert(j(4L, 5L).contains(math.round(7.0 / 13.0 * 1e9))) // later batch vs 4
+    assert(streamed.count { case (a, b, _, _) => Set(a, b).subsetOf(Set(1L, 2L, 5L)) } == 3)
+    // the last batch: intra, probe and new-vs-new pairs, with their stats
+    assert(streamed.contains((7L, 8L, 1000000000L, (10L, 10L, 10L))))
+    for (ix <- Seq(1L, 2L, 5L); b <- Seq(7L, 8L))
+      assert(streamed.contains((ix, b, math.round(7.0 / 13.0 * 1e9), (10L, 10L, 7L))))
+    for (a <- Seq(7L, 8L))
+      assert(streamed.contains((a, 9L, math.round(9.0 / 11.0 * 1e9), (10L, 10L, 9L))))
   }
 
   test("streaming dedup with compaction ≡ one full pass across the boundary") {

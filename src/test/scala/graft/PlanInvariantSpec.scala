@@ -288,6 +288,25 @@ class PlanInvariantSpec extends SparkSpec {
     lineitemQueries.foreach(n => assert(all(n).contains("ReadSchema"), n))
   }
 
+  test("a semi-join against a small pinned join result broadcasts (adaptive off)") {
+    // the pin's leaf carries its measured size: before the pin the join
+    // estimate is the product of both sides (20000 rows read as GBs),
+    // which planned this probe as a sort-merge join
+    import org.apache.spark.sql.functions._
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try {
+      val facts = spark.range(20000).select(col("id"), (col("id") % 100).as("k"))
+      val dims = spark.range(100).select(col("id").as("k"), (col("id") * 2).as("w"))
+      val pinned = graft.ops.Materialize.barrier(facts.join(dims, "k"))
+      val p = spark.range(50).join(pinned, Seq("id"), "left_semi")
+        .queryExecution.executedPlan.toString
+      assert(p.contains("BroadcastHashJoin"), p)
+      graft.ops.Materialize.release(pinned)
+    } finally spark.conf.set(key, prev)
+  }
+
   test("conveyor accept plans gate on a local relation, never on the proposal log") {
     import graft.cdc.Conveyor
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, Range, Window}

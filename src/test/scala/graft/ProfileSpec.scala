@@ -6,14 +6,15 @@ import scala.jdk.CollectionConverters._
 
 /** [[Profile]], the dev tools' stage profiler, on the shared test
   * context: the PROFILE line is JSON, every task lands in a stage row,
-  * gap ≤ wall, a shuffle plan reports its shuffle-write volume, and a
-  * pin's stage is named by its Materialize frame.
+  * gap ≤ wall, a shuffle plan reports its shuffle-write volume, a
+  * pin's stage is named by its Materialize frame, no stage is named by
+  * the adaptive pool's frame, and the job count is reported.
   */
 class ProfileSpec extends SparkSpec {
 
   /** Profile `action` alone and return its parsed stage rows. The
     * listener is detached afterwards: every suite shares one context. */
-  private def profiled(region: String)(action: => Unit): (Profile, Seq[JsonNode]) = {
+  private def profiled(region: String)(action: => Unit): (Profile, Seq[JsonNode], Int) = {
     val p = new Profile(spark.sparkContext)
     try {
       p.drain()
@@ -28,12 +29,13 @@ class ProfileSpec extends SparkSpec {
       val stages = json.get("stages").elements.asScala.toSeq
       assert(p.tasksSeen > 0)
       assert(stages.map(_.get("tasks").asInt).sum == p.tasksSeen, line)
-      (p, stages)
+      assert(json.get("jobs").asInt == p.jobsSeen, line)
+      (p, stages, p.jobsSeen)
     } finally p.detach()
   }
 
   test("a one-shuffle plan: every task in a stage row, shuffle-write MB > 0") {
-    val (p, stages) = profiled("one_shuffle") {
+    val (p, stages, _) = profiled("one_shuffle") {
       spark.range(0, 20000, 1, 4).groupBy((col("id") % 5000).as("k")).count()
         .write.format("noop").mode("overwrite").save()
     }
@@ -42,11 +44,15 @@ class ProfileSpec extends SparkSpec {
   }
 
   test("dupClusters at sf0.001: a stage is named by its Materialize pin") {
-    val (_, stages) = profiled("dedup_clusters") {
+    val (_, stages, jobs) = profiled("dedup_clusters") {
       SparkEntry.queries("dedup_clusters")(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
     }
     val names = stages.map(_.get("name").asText)
     assert(names.exists(_.startsWith("graft.ops.Materialize")), names.distinct.mkString("\n"))
+    // adaptive query stages run from a pool thread: they are named
+    // through their SQL execution's call site, not the pool's frame
+    assert(!names.exists(_.contains("CompletableFuture")), names.distinct.mkString("\n"))
+    assert(jobs > 0)
   }
 }
