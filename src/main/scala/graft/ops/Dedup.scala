@@ -349,7 +349,10 @@ object Dedup {
       pairs: DataFrame, k: Int = 3): DataFrame =
     jaccardFromShingles(shingleHashes(docs, id, text, k), id, pairs)
 
-  /** Jaccard over a prebuilt (doc, shingle) frame (a distinct set). */
+  /** Jaccard over a prebuilt (doc, shingle) frame (a distinct set).
+    * `pairs` holds one row per (id_a, id_b): the result has one row per
+    * pair, so a repeated pair comes back once, and any other column of
+    * `pairs` rides along with its first value for the pair. */
   def jaccardFromShingles(sh: DataFrame, id: String, pairs: DataFrame): DataFrame = {
     val sizes = sh.groupBy(col(id)).agg(count(lit(1)).as("n"))
     // no broadcast hint: candidate-pair cardinality is bounded only by
@@ -359,10 +362,13 @@ object Dedup {
     // pair without overlap keeps its row; a pair whose id has no
     // shingles drops at the size joins below
     val hits = sh.select(col(id).as("id_b"), col("shingle"), lit(1).as("__hit"))
+    val carried = pairs.columns.filterNot(Set("id_a", "id_b"))
     pairs
       .join(sh.select(col(id).as("id_a"), col("shingle")), "id_a")
       .join(hits, Seq("id_b", "shingle"), "left")
-      .groupBy(pairs.columns.map(col): _*).agg(count(col("__hit")).as("n_inter"))
+      .groupBy("id_a", "id_b")
+      .agg(count(col("__hit")).as("n_inter"), carried.map(c => first(col(c)).as(c)): _*)
+      .select((pairs.columns :+ "n_inter").map(col): _*)
       .join(sizes.select(col(id).as("id_a"), col("n").as("n_a")), "id_a")
       .join(sizes.select(col(id).as("id_b"), col("n").as("n_b")), "id_b")
       .withColumn("jaccard",
@@ -959,26 +965,36 @@ object Dedup {
     * frame holds every shingle of every doc it holds, so each pair's
     * sizes, intersection and Jaccard are those of a verify over the
     * batch's frame alone. Every pin carries its measured size, so the
-    * joins over these small frames plan as broadcasts.
+    * joins over a small batch's frames plan as broadcasts.
     */
   private def incrementalCore(newDocs: DataFrame, index: DedupIndex,
       id: String, text: String, threshold: Double,
       numHashes: Int, bands: Int, k: Int): (DataFrame, DedupIndex) = {
     requireSameBanding(index, numHashes, bands, k, "probe")
-    // a batch is small by contract: ONE pin holds its rows with their
-    // representative (the min id among md5-identical normalized texts,
-    // the collapseExact rule), so the caller's batch plan (a gated
-    // batch's filter and scoring jobs) runs once. collapseExact's shape
-    // (a text-free fingerprint pin, then the membership and shingle
-    // pins each reading `docs` again) keeps corpus text out of pins at
-    // corpus scale, but here it ran the batch plan twice
+    // ONE pin evaluates the caller's batch plan (a gated batch's filter
+    // and scoring jobs) with each row's normalized-text md5. It adds no
+    // exchange, so the batch keeps its source partitioning for the
+    // shingle and MinHash passes. collapseExact's shape (a fingerprint
+    // pin, then the membership and shingle pins each reading `newDocs`
+    // again) ran the batch plan twice
     val batch = Materialize.barrier(
       newDocs.filter(col(id).isNotNull && col(text).isNotNull)
-        .select(col(id), col(text),
-          min(col(id)).over(Window.partitionBy(md5(norm(col(text))))).as("rep_id")))
-    val members = batch.select(col(id), col("rep_id"))
-    val shNew = Materialize.barrier(
-      shingleHashes(batch.filter(col(id) === col("rep_id")), id, text, k))
+        .select(col(id), col(text), md5(norm(col(text))).as("__fp")))
+    // the representative is the min id among identical md5s (the
+    // collapseExact rule); the window's exchange carries (id, md5), no
+    // text: 1.9 MB for a 50,000-doc batch (TimeOne dedup_incremental at
+    // 40× sf0.1, 4 cores), where a window over the text moved 11.7 MB
+    val members = Materialize.barrier(batch.select(col(id),
+      min(col(id)).over(Window.partitionBy("__fp")).as("rep_id")))
+    // the representatives' rows come back from the batch through a
+    // semi-join on the pinned representative ids, which broadcast
+    // unless the batch is very large; then the text-bearing batch pin
+    // is released: neither the index the batch folds into nor the pairs
+    // keep the batch's text
+    val shNew = Materialize.barrier(shingleHashes(
+      batch.join(members.filter(col(id) === col("rep_id")).select(col(id)),
+        Seq(id), "left_semi"), id, text, k))
+    Materialize.release(batch)
     // pinned: read by both candidate arms, and the index arm the batch
     // folds in (later probes read it as stored blocks)
     val newBands = Materialize.barrier(

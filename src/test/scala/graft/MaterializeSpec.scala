@@ -105,17 +105,25 @@ class MaterializeSpec extends SparkSpec {
     docs.join(keys, "id").repartition(3)
   }
 
-  /** The reliable leg needs a checkpoint dir on the shared context; the
-    * local master keeps picking the local leg with one set. */
-  private lazy val checkpointDir = {
-    val d = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    spark.sparkContext.setCheckpointDir(d)
-    d
+  /** Runs `body` with a checkpoint dir on the shared context, which the
+    * reliable leg needs, then unsets it (`setCheckpointDir(null)` leaves
+    * none) and deletes the directory: `Materialize.barrier` branches on
+    * the dir on a non-local master, so no other suite may see one. */
+  private def withCheckpointDir[T](body: => T): T = {
+    val sc = spark.sparkContext
+    assert(sc.getCheckpointDir.isEmpty, "a checkpoint dir is already set")
+    val d = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
+    sc.setCheckpointDir(d.toString)
+    try body
+    finally {
+      sc.setCheckpointDir(null)
+      org.apache.commons.io.FileUtils.deleteDirectory(d)
+      assert(sc.getCheckpointDir.isEmpty && !d.exists())
+    }
   }
 
   test("each leg's pin carries its measured row count and stored size") {
     import org.apache.spark.sql.catalyst.expressions.UnsafeRow
-    checkpointDir
     // (leg, pin, share of the UnsafeRow bytes the leg stores at least):
     // the checkpoint legs store the UnsafeRows themselves; the persist
     // leg stores columnar batches, whose strings carry no 8-byte
@@ -125,7 +133,7 @@ class MaterializeSpec extends SparkSpec {
       ("local", Materialize.barrier(_), 1.0),
       ("reliable", GraftPin.checkpoint(_, reliable = true, eager = true).measured, 1.0),
       ("cluster", Materialize.clusterBarrier(_), 0.9))
-    for (((leg, pin, share), salt) <- legs.zipWithIndex) {
+    withCheckpointDir(for (((leg, pin, share), salt) <- legs.zipWithIndex) {
       val m = pin(textJoin(salt))
       val stats = m.queryExecution.optimizedPlan.stats
       val rows = m.count()
@@ -139,17 +147,17 @@ class MaterializeSpec extends SparkSpec {
         stats.sizeInBytes <= unsafeBytes * 2,
         s"$leg: sizeInBytes ${stats.sizeInBytes} vs $unsafeBytes stored UnsafeRow bytes")
       Materialize.release(m)
-    }
+    })
   }
 
   test("a measured pin launches no more jobs than Spark's own pin") {
-    checkpointDir
     def frame(salt: Int) = (1 to 2000).toDF("id")
       .groupBy((col("id") % (37 + salt)).as("k")).agg(count(lit(1)).as("n"))
     assert(jobsOf(Materialize.barrier(frame(0))) ===
       jobsOf(frame(1).localCheckpoint(eager = true)))
-    assert(jobsOf(GraftPin.checkpoint(frame(2), reliable = true, eager = true).measured) ===
-      jobsOf(frame(3).checkpoint(eager = true)))
+    withCheckpointDir(
+      assert(jobsOf(GraftPin.checkpoint(frame(2), reliable = true, eager = true).measured) ===
+        jobsOf(frame(3).checkpoint(eager = true))))
     assert(jobsOf(Materialize.barrierAgg(frame(4), sum("n"))) ===
       jobsOf(frame(5).localCheckpoint(eager = false).agg(sum("n")).collect()))
     assert(jobsOf(Materialize.clusterBarrier(frame(6))) ===
