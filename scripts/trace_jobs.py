@@ -15,9 +15,8 @@ the driver time between its jobs).
 A pin's own frames (`graft.ops.Materialize...`) are skipped when
 naming the group, so a pin is named by the operator line that pinned;
 `[pin]` marks such a group. A job whose site has no `graft.ops` frame
-outside Materialize (a `barrierAll` pin runs on a pool thread, and the
-trace keeps four frames) is named by its last `graft.ops` frame, and a
-job with none by `(other)`.
+outside Materialize (the trace keeps four frames) is named by its last
+`graft.ops` frame, and a job with none by `(other)`.
 """
 import json
 import sys

@@ -20,11 +20,12 @@ package graft {
 
   /** The stage profiler of the dev tools (TimeOne, ScaleSmoke). It
     * records every task and stage the context finishes and renders them
-    * as one `PROFILE {…}` JSON line per region: the number of jobs;
-    * per stage its id, its name (the first `graft.` frame of its call
-    * site, else of the call site of the SQL execution its job belongs
-    * to — adaptive execution submits query stages from a pool thread
-    * whose own stack names no operator — else Spark's short name),
+    * as one `PROFILE {…}` JSON line per region: the number of jobs and
+    * of pin actions; per stage its id, its name (the first `graft.`
+    * frame outside `Materialize` of its call site, else of the call site
+    * of the SQL execution its job belongs to — adaptive execution
+    * submits query stages from a pool thread whose own stack names no
+    * operator — else Spark's short name),
     * task count, p50 / max / total task ms, input, shuffle-read
     * and shuffle-write MB, and its span in ms from the region's first
     * submission; then the total inter-stage gap, time no stage ran
@@ -41,9 +42,12 @@ package graft {
     private val tasks = new ConcurrentLinkedQueue[Task]()
     // stage id -> (name, submission ms, completion ms)
     private val stages = new ConcurrentHashMap[Int, (String, Long, Long)]()
-    // SQL execution id -> first graft. frame of its call site; stage id -> it
+    // SQL execution id -> the graftFrame of its call site; stage id -> it
     private val execNames = new ConcurrentHashMap[Long, String]()
     private val stageExecNames = new ConcurrentHashMap[Int, String]()
+    // SQL execution ids started by a Materialize pin; those that ran a job
+    private val pinExecs = ConcurrentHashMap.newKeySet[Long]()
+    private val pinActions = ConcurrentHashMap.newKeySet[Long]()
     private val jobs = new AtomicInteger()
     sc.addSparkListener(this) // after the fields: events may arrive at once
 
@@ -54,11 +58,22 @@ package graft {
           m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten))
       }
 
-    private def graftFrame(callSite: String): Option[String] =
-      callSite.linesIterator.map(_.trim).find(_.startsWith("graft."))
+    private def graftFrames(callSite: String): Seq[String] =
+      callSite.linesIterator.map(_.trim).filter(_.startsWith("graft.")).toSeq
+
+    private def isPin(frame: String): Boolean = frame.startsWith("graft.ops.Materialize")
+
+    /** The first `graft.` frame outside `graft.ops.Materialize`, so a pin
+      * is named by the operator that pinned; the Materialize frame only
+      * when no other `graft.` frame is on the stack. */
+    private def graftFrame(callSite: String): Option[String] = {
+      val frames = graftFrames(callSite)
+      frames.find(!isPin(_)).orElse(frames.headOption)
+    }
 
     override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
       case s: SparkListenerSQLExecutionStart =>
+        if (graftFrames(s.details).headOption.exists(isPin)) pinExecs.add(s.executionId)
         graftFrame(s.details).foreach(execNames.put(s.executionId, _))
       case _ => ()
     }
@@ -67,9 +82,11 @@ package graft {
       jobs.incrementAndGet()
       for {
         props <- Option(e.properties)
-        id <- Option(props.getProperty("spark.sql.execution.id"))
-        name <- Option(execNames.get(id.toLong))
-      } e.stageIds.foreach(stageExecNames.put(_, name))
+        id <- Option(props.getProperty("spark.sql.execution.id")).map(_.toLong)
+      } {
+        if (pinExecs.contains(id)) pinActions.add(id)
+        Option(execNames.get(id)).foreach(name => e.stageIds.foreach(stageExecNames.put(_, name)))
+      }
     }
 
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
@@ -83,7 +100,8 @@ package graft {
     def detach(): Unit = sc.removeSparkListener(this)
 
     def reset(): Unit = {
-      tasks.clear(); stages.clear(); execNames.clear(); stageExecNames.clear(); jobs.set(0)
+      tasks.clear(); stages.clear(); execNames.clear(); stageExecNames.clear()
+      pinExecs.clear(); pinActions.clear(); jobs.set(0)
     }
 
     /** Wait until every event posted so far has reached this listener. */
@@ -93,6 +111,11 @@ package graft {
 
     /** Jobs started since the last reset. */
     def jobsSeen: Int = jobs.get
+
+    /** Pin actions since the last reset: SQL executions whose call site's
+      * first `graft.` frame is `graft.ops.Materialize` and that ran a job
+      * (graftbench counts them the same way). */
+    def pinsSeen: Int = pinActions.size
 
     private def p50Max(ts: Iterable[Task]): (Long, Long) = {
       val ms = ts.map(_.ms).toArray.sorted
@@ -120,8 +143,8 @@ package graft {
           s""""input_mb":${mb(ts.map(_.input))},"shuffle_read_mb":${mb(ts.map(_.shufRead))},""" +
           s""""shuffle_write_mb":${mb(ts.map(_.shufWrite))},"start_ms":${start - t0},"end_ms":${end - t0}}"""
       }
-      s"""PROFILE {"region":${SparkEntry.jsonString(region)},"jobs":$jobsSeen,"gap_ms":$gap,""" +
-        s""""wall_ms":${prevEnd - t0},"stages":${rows.mkString("[", ",", "]")}}"""
+      s"""PROFILE {"region":${SparkEntry.jsonString(region)},"jobs":$jobsSeen,"pins":$pinsSeen,""" +
+        s""""gap_ms":$gap,"wall_ms":${prevEnd - t0},"stages":${rows.mkString("[", ",", "]")}}"""
     }
   }
 }

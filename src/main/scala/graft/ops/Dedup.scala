@@ -50,43 +50,28 @@ object Dedup {
   def exactMembership(docs: DataFrame, id: String, text: String): DataFrame =
     collapseExact(docs, id, text)._1
 
-  /** The collapse itself: (members = (id, rep_id), repDocs = one doc
-    * row per distinct normalized text). The fingerprint aggregate
-    * carries only (fp, min id) — never text — so its map-side combine
-    * shuffles 24 bytes per doc; representative rows come back from the
-    * docs frame via a semi-join on the (typically broadcastable,
-    * AQE-sized) representative-id set.
+  /** The collapse itself: (members = (id, rep_id), pinned; repDocs =
+    * one doc row per distinct normalized text, lazy). ONE pin: the
+    * members frame is a window over (id, md5) — `rep_id` is the min id
+    * of its md5 partition — so its one exchange carries each doc's
+    * (id, md5), never its text (1.9 MB for a 50,000-doc batch at 40×
+    * sf0.1). An aggregate of (md5, min id) combines map-side, but its
+    * result must then be joined back onto every doc's md5: at corpus
+    * scale, a second exchange of the same rows. The window buffers an md5 group in one
+    * task (spilling past Spark's window buffer threshold); a 10⁴-doc
+    * identical cluster is `HotBucketSpec`'s case.
+    * The representatives' rows come back from `docs` through a
+    * semi-join on the pinned representative ids, which the pin's
+    * measured size lets broadcast. Rows with a null id or text are in
+    * neither frame.
     */
   def collapseExact(docs: DataFrame, id: String, text: String): (DataFrame, DataFrame) = {
-    val (members, repDocs) = collapseExactRaw(docs, id, text)
-    (Materialize.barrier(members), repDocs)
-  }
-
-  /** [[collapseExact]] without the membership pin — for multi-pin
-    * operators that batch ALL their independent pins into one
-    * concurrent [[Materialize.barrierAll]] instead of paying a serial
-    * job latency per pin (the members pin has no dependency on the
-    * shingle/signature pins: repDocs reads `groups`, never the pinned
-    * members result).
-    *
-    * The FINGERPRINT frame is pinned first (r16): `fp` is one
-    * normalize+md5 pass over the full text column, and it sits in the
-    * lineage of every downstream pin — the membership join reads it on
-    * both sides, and the shingle/signature jobs reach it through
-    * `groups`. Unpinned, each of those jobs replayed the text pass
-    * (the r16 curation stage audit showed it as stacked ~1.2 s
-    * single-task chains). Pinned, the corpus's text is read exactly
-    * twice per dedup operator — once here, once by the shingle/
-    * signature projections — and the pinned frame is the leaf-pin
-    * rule's WIN side: id + 32-char hash, never text.
-    */
-  private def collapseExactRaw(docs: DataFrame, id: String,
-      text: String): (DataFrame, DataFrame) = {
-    val fp = Materialize.barrier(docs.filter(col(id).isNotNull && col(text).isNotNull)
-      .select(col(id), md5(norm(col(text))).as("__fp")))
-    val groups = fp.groupBy("__fp").agg(min(col(id)).as("rep_id"))
-    val members = fp.join(groups, "__fp").select(col(id), col("rep_id"))
-    val repDocs = docs.join(groups.select(col("rep_id").as(id)), Seq(id), "left_semi")
+    val members = Materialize.barrier(
+      docs.filter(col(id).isNotNull && col(text).isNotNull)
+        .select(col(id), md5(norm(col(text))).as("__fp"))
+        .select(col(id), min(col(id)).over(Window.partitionBy("__fp")).as("rep_id")))
+    val repDocs = docs.join(members.filter(col(id) === col("rep_id")).select(col(id)),
+      Seq(id), "left_semi")
     (members, repDocs)
   }
 
@@ -523,17 +508,14 @@ object Dedup {
   private def repDupPairs(docs: DataFrame, id: String, text: String,
       threshold: Double, numHashes: Int, bands: Int,
       maxBucketSize: Int, k: Int = 3): (DataFrame, DataFrame, DataFrame) = {
-    val (membersRaw, repDocs) = collapseExactRaw(docs, id, text)
+    val (members, repDocs) = collapseExact(docs, id, text)
     // the banding default is rows-per-band = 2: candidate recall at the
     // THRESHOLD (not just at dup-grade J) is what makes the verified
     // output exhaustive — miss = (1−J²)^b = 0.36³² ≈ 6e-15 at J = 0.8,
     // where r = 4 banding would miss ≈ 2e-4 of borderline pairs.
     // The shingle frame is built once and shared by the signature and
-    // verification stages (eagerly checkpointed — it is read 3×). The
-    // membership and shingle pins are independent, so they materialize
-    // concurrently (one job latency, not two).
-    val Seq(members, sh) = Materialize.barrierAll(Seq(
-      membersRaw, shingleHashes(repDocs, id, text, k)))
+    // verification stages (eagerly checkpointed — it is read 3×).
+    val sh = Materialize.barrier(shingleHashes(repDocs, id, text, k))
     // not pinned: jaccardFromShingles reads the candidate pairs once,
     // so the minhash + LSH band self-join + distinct run once inside
     // the verify's own job
@@ -866,7 +848,7 @@ object Dedup {
 
   def buildDedupIndex(docs: DataFrame, id: String, text: String,
       numHashes: Int = 64, bands: Int = 32, k: Int = 3): DedupIndex = {
-    val (membersRaw, repDocs) = collapseExactRaw(docs, id, text)
+    val (members, repDocs) = collapseExact(docs, id, text)
     // pinned like repDupPairs/ngramCoverage pin theirs (r15 stage
     // audit): the index's band frame AND its shingles frame both derive
     // from `sh`, so an unpinned build re-ran the tokenize+shingle
@@ -874,9 +856,7 @@ object Dedup {
     // probe's candidate join, the touched-rep verify, the sizes leg).
     // The frame is 2 longs per shingle; the nightly deployment writes
     // it to parquet anyway, so the pin is the in-session equivalent.
-    // Membership + shingle pins are independent → concurrent (r16).
-    val Seq(members, sh) = Materialize.barrierAll(Seq(
-      membersRaw, shingleHashes(repDocs, id, text, k)))
+    val sh = Materialize.barrier(shingleHashes(repDocs, id, text, k))
     // the band arm is pinned like incrementalCore pins ITS batch arm
     // (and like the nightly deployment persists it to parquet): every
     // probe's candidate join reads it, and unpinned each read re-ran
@@ -972,28 +952,15 @@ object Dedup {
       numHashes: Int, bands: Int, k: Int): (DataFrame, DedupIndex) = {
     requireSameBanding(index, numHashes, bands, k, "probe")
     // ONE pin evaluates the caller's batch plan (a gated batch's filter
-    // and scoring jobs) with each row's normalized-text md5. It adds no
-    // exchange, so the batch keeps its source partitioning for the
-    // shingle and MinHash passes. collapseExact's shape (a fingerprint
-    // pin, then the membership and shingle pins each reading `newDocs`
-    // again) ran the batch plan twice
-    val batch = Materialize.barrier(
-      newDocs.filter(col(id).isNotNull && col(text).isNotNull)
-        .select(col(id), col(text), md5(norm(col(text))).as("__fp")))
-    // the representative is the min id among identical md5s (the
-    // collapseExact rule); the window's exchange carries (id, md5), no
-    // text: 1.9 MB for a 50,000-doc batch (TimeOne dedup_incremental at
-    // 40× sf0.1, 4 cores), where a window over the text moved 11.7 MB
-    val members = Materialize.barrier(batch.select(col(id),
-      min(col(id)).over(Window.partitionBy("__fp")).as("rep_id")))
-    // the representatives' rows come back from the batch through a
-    // semi-join on the pinned representative ids, which broadcast
-    // unless the batch is very large; then the text-bearing batch pin
-    // is released: neither the index the batch folds into nor the pairs
-    // keep the batch's text
-    val shNew = Materialize.barrier(shingleHashes(
-      batch.join(members.filter(col(id) === col("rep_id")).select(col(id)),
-        Seq(id), "left_semi"), id, text, k))
+    // and scoring jobs). It adds no exchange, so the batch keeps its
+    // source partitioning for the shingle and MinHash passes. Without
+    // it the collapse's membership and shingle pins would each run the
+    // batch plan
+    val batch = Materialize.barrier(newDocs.select(col(id), col(text)))
+    val (members, repDocs) = collapseExact(batch, id, text)
+    // then the text-bearing batch pin is released: neither the index
+    // the batch folds into nor the pairs keep the batch's text
+    val shNew = Materialize.barrier(shingleHashes(repDocs, id, text, k))
     Materialize.release(batch)
     // pinned: read by both candidate arms, and the index arm the batch
     // folds in (later probes read it as stored blocks)
@@ -1105,16 +1072,13 @@ object Dedup {
     // exact-identity collapse first (see verifiedDupPairs): identical
     // docs share a simhash, so they collide in every band — without the
     // collapse one B-sized identical cluster yields B²/2 band candidates
-    val (membersRaw, repDocs) = collapseExactRaw(docs, id, text)
     // three shared frames, all pinned: the membership map, the shingle
     // frame (feeds signatures + verify), and the signature frame (feeds
     // the band join's both sides and the minhash tail's two hamming
-    // lookups). None depends on another's PINNED result, so the three
-    // materializing jobs run CONCURRENTLY (barrierAll, r16) instead of
-    // paying three serial job latencies.
-    val Seq(members, sh, sig) = Materialize.barrierAll(Seq(membersRaw,
-      shingleHashes(repDocs, id, text),
-      simhash(repDocs, id, text).select(col(id), col("simhash"))))
+    // lookups)
+    val (members, repDocs) = collapseExact(docs, id, text)
+    val sh = Materialize.barrier(shingleHashes(repDocs, id, text))
+    val sig = Materialize.barrier(simhash(repDocs, id, text).select(col(id), col("simhash")))
     val banded = sig.select(col(id), col("simhash"),
       posexplode(array((0 until nBands).map(b =>
         shiftrightunsigned(col("simhash"), b * width)

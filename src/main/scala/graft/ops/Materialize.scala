@@ -116,6 +116,11 @@ package graft.ops {
     *
     * No pin gains a job for this: the counts ride the action that
     * materializes the pin.
+    *
+    * Pins run one at a time, on the calling thread: an operator with
+    * several pins calls [[barrier]] once per frame. Nothing here blocks
+    * on a shared thread pool, so a failed pin fails its caller at once
+    * and no pin waits on another's thread.
     */
   object Materialize {
 
@@ -176,27 +181,6 @@ package graft.ops {
         (p, p.agg(agg).collect()(0))
       }
     }
-
-    /** Materialize several INDEPENDENT frames concurrently — each gets
-      * exactly the [[barrier]] treatment, but the materializing jobs are
-      * submitted from separate driver threads (guide §2.6: actions are
-      * only sequential because the driver calls them sequentially).
-      * Multi-pin operators (collapse membership + shingle + signature
-      * frames) otherwise serialize 2–3 small jobs whose cost at converged
-      * sizes is job latency, not compute; concurrent submission lets one
-      * job's tail back-fill with the next job's tasks. Callers must pass
-      * frames with no data dependency on each other's PINNED result
-      * (sharing upstream lineage is fine — each job evaluates its own).
-      */
-    def barrierAll(dfs: Seq[DataFrame]): Seq[DataFrame] =
-      if (dfs.lengthCompare(2) < 0) dfs.map(barrier)
-      else {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: ExecutionContext = ExecutionContext.global
-        val pinned = dfs.map(df => Future(barrier(df)))
-        pinned.map(Await.result(_, Duration.Inf))
-      }
 
     /** Best-effort release of a frame returned by [[barrier]] once every
       * consumer has run — bounds the blocks held across a long sweep

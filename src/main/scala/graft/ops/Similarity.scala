@@ -443,10 +443,9 @@ object Similarity {
     // fetch + self-sim legs — unpinned, each read re-ran the
     // vector-value collapse groupBy over the raw corpus. Both frames
     // are rep-/member-proportional and narrow (ids + one d-float
-    // vector); the pins run CONCURRENTLY (independent jobs).
-    val Seq(members, repVecs) = Materialize.barrierAll(Seq(
-      base.join(reps, "__v").select(col("__id"), col("rep_id")),
-      reps.select(col("rep_id").as("vid"), col("__v").as("vec"))))
+    // vector).
+    val members = Materialize.barrier(base.join(reps, "__v").select(col("__id"), col("rep_id")))
+    val repVecs = Materialize.barrier(reps.select(col("rep_id").as("vid"), col("__v").as("vec")))
     // recall budget: per-pair candidate-miss <= 1e-6 AT the threshold,
     // tables hard-capped at 512 — tables grow as 1/agree^planes, so at
     // low thresholds an uncapped budget explodes exponentially with the

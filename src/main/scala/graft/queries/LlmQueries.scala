@@ -2955,20 +2955,11 @@ object LlmQueries {
     // Two full-corpus regex passes become one narrow checkpoint read;
     // the dedup stage itself still consumes `sur` lazily, unchanged —
     // the r14 rejection of pinning the TEXT-bearing survivors stands.
-    //
-    // r16: the dedup pipeline's own pins (membership + shingle frames,
-    // inside verifiedDupEdges) and this pin are independent jobs whose
-    // lineages each replay the regex chain — submit them from separate
-    // driver threads (guide §2.6) so the full-corpus passes overlap
-    // instead of running back-to-back.
-    val edgesF = scala.concurrent.Future(Dedup.verifiedDupEdges(
-      sur, "doc_id", "text", threshold = 0.8, numHashes = 32,
-      bands = 16))(scala.concurrent.ExecutionContext.global)
+    val edges = Dedup.verifiedDupEdges(sur, "doc_id", "text", threshold = 0.8,
+      numHashes = 32, bands = 16)
     val surAttrs = graft.ops.Materialize.barrier(
       sur.select(col("doc_id"), col("source"),
         length(col("text")).cast("long").as("__n_chars"), col("has_pii")))
-    val edges = scala.concurrent.Await.result(edgesF,
-      scala.concurrent.duration.Duration.Inf)
     val cl = Dedup.dupClusters(surAttrs.select("doc_id"), "doc_id", edges)
     val surStats = surAttrs.join(cl.select("doc_id", "is_dup"), "doc_id")
       .groupBy("source")

@@ -164,17 +164,17 @@ class MaterializeSpec extends SparkSpec {
       jobsOf(frame(7).persist(StorageLevel.DISK_ONLY_2).count()))
   }
 
-  /** Lines of src/main/scala matching `call` outside `seam`, skipping
-    * comment lines: comments are not call sites. */
-  private def callsOutside(call: scala.util.matching.Regex, seam: String): Seq[String] = {
+  /** Lines of src/main/scala matching `call` outside the `seams` files,
+    * skipping comment lines: comments are not call sites. */
+  private def callsOutside(call: scala.util.matching.Regex, seams: String*): Seq[String] = {
     def scalaFiles(d: java.io.File): Seq[java.io.File] =
       Option(d.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap(f =>
         if (f.isDirectory) scalaFiles(f)
         else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
-    val seamFile = new java.io.File(seam)
+    val seamFiles = seams.map(new java.io.File(_))
     val files = scalaFiles(new java.io.File("src/main/scala"))
-    assert(files.contains(seamFile), s"scan did not reach $seam")
-    files.filterNot(_ == seamFile).flatMap { f =>
+    for (s <- seamFiles) assert(files.contains(s), s"scan did not reach $s")
+    files.filterNot(seamFiles.contains).flatMap { f =>
       val src = scala.io.Source.fromFile(f, "UTF-8")
       try src.getLines().zipWithIndex.collect {
         case (line, i) if !line.trim.startsWith("*") && !line.trim.startsWith("/*") &&
@@ -200,5 +200,13 @@ class MaterializeSpec extends SparkSpec {
     val hits = callsOutside("""addSparkListener\(|extends SparkListener\b""".r,
       "src/main/scala/graft/Profile.scala")
     assert(hits.isEmpty, s"listeners outside Profile:\n${hits.mkString("\n")}")
+  }
+
+  test("nothing in src/main blocks on the global thread pool") {
+    // pins run one at a time on the calling thread: a Future on the
+    // shared pool lets a failed pin's siblings run on, and a pin nested
+    // in another Future waits on a thread of the same pool
+    val hits = callsOutside("""\bFuture\(|\bAwait\.|ExecutionContext\.global""".r)
+    assert(hits.isEmpty, s"global-pool blocking in src/main:\n${hits.mkString("\n")}")
   }
 }

@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 /** [[Profile]], the dev tools' stage profiler, on the shared test
   * context: the PROFILE line is JSON, every task lands in a stage row,
   * gap ≤ wall, a shuffle plan reports its shuffle-write volume, a
-  * pin's stage is named by its Materialize frame, no stage is named by
-  * the adaptive pool's frame, and the job count is reported.
+  * pin's stage is named by the operator that pinned (never by
+  * Materialize's own frame), no stage is named by the adaptive pool's
+  * frame, and the job and pin counts are reported.
   */
 class ProfileSpec extends SparkSpec {
 
@@ -30,6 +31,7 @@ class ProfileSpec extends SparkSpec {
       assert(p.tasksSeen > 0)
       assert(stages.map(_.get("tasks").asInt).sum == p.tasksSeen, line)
       assert(json.get("jobs").asInt == p.jobsSeen, line)
+      assert(json.get("pins").asInt == p.pinsSeen, line)
       (p, stages, p.jobsSeen)
     } finally p.detach()
   }
@@ -43,13 +45,15 @@ class ProfileSpec extends SparkSpec {
     assert(stages.exists(_.get("shuffle_write_mb").asDouble > 0))
   }
 
-  test("dupClusters at sf0.001: a stage is named by its Materialize pin") {
-    val (_, stages, jobs) = profiled("dedup_clusters") {
+  test("dupClusters at sf0.001: a pin's stage is named by the operator that pinned") {
+    val (p, stages, jobs) = profiled("dedup_clusters") {
       SparkEntry.queries("dedup_clusters")(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
     }
     val names = stages.map(_.get("name").asText)
-    assert(names.exists(_.startsWith("graft.ops.Materialize")), names.distinct.mkString("\n"))
+    assert(names.exists(_.startsWith("graft.ops.Dedup$.dupClusters")), names.distinct.mkString("\n"))
+    assert(!names.exists(_.startsWith("graft.ops.Materialize")), names.distinct.mkString("\n"))
+    assert(p.pinsSeen > 0)
     // adaptive query stages run from a pool thread: they are named
     // through their SQL execution's call site, not the pool's frame
     assert(!names.exists(_.contains("CompletableFuture")), names.distinct.mkString("\n"))
