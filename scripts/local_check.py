@@ -1,13 +1,19 @@
 #!/usr/bin/env python3
-"""Local stand-in for the driver's t2 correctness gate: run each oracle
-SQL in DuckDB over the same parquet tables, compare to the Verify dump
-(exact values, columns sorted by name)."""
+"""Local stand-in for the t2 correctness gate: run each oracle SQL in
+DuckDB over the same parquet tables, compare to the Verify dump (exact
+values, columns sorted by name).
+
+Usage: local_check.py [sf_dir] [out_dir] [names]
+`names` is the comma-separated query list given to Verify as its third
+argument; only those names are checked. A named query with no output,
+or a name missing from oracle_sql.json, FAILs."""
 import sys, json, glob, hashlib
 import duckdb, pyarrow.parquet as pq
 import pandas as pd
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+names = sys.argv[3].split(",") if len(sys.argv) > 3 else None
 
 con = duckdb.connect()
 for t in ["region","nation","customer","supplier","part","orders","lineitem",
@@ -16,7 +22,10 @@ for t in ["region","nation","customer","supplier","part","orders","lineitem",
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
 ok = fail = 0
-for name, sql in sorted(oracle.items()):
+for name in (names if names is not None else sorted(oracle)):
+    if name not in oracle:
+        print(f"FAIL {name}: not in oracle_sql.json"); fail += 1; continue
+    sql = oracle[name]
     try:
         want = con.execute(sql).fetchdf()
     except Exception as e:
@@ -67,7 +76,7 @@ for name, sql in sorted(oracle.items()):
 
 # rows-only queries
 import os
-for d in sorted(glob.glob(f"{out_dir}/*/")):
+for d in sorted(glob.glob(f"{out_dir}/*/")) if names is None else []:
     name = d.rstrip("/").split("/")[-1]
     if name in oracle: continue
     files = glob.glob(f"{d}/*.parquet")

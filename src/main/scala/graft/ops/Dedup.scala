@@ -65,11 +65,22 @@ object Dedup {
     * measured size lets broadcast. Rows with a null id or text are in
     * neither frame.
     */
-  def collapseExact(docs: DataFrame, id: String, text: String): (DataFrame, DataFrame) = {
+  def collapseExact(docs: DataFrame, id: String, text: String): (DataFrame, DataFrame) =
+    collapseOn(docs, id, text, c => md5(norm(c)))
+
+  /** The one collapse behind [[collapseExact]] and the vector index
+    * build ([[Similarity.buildEmbeddingIndex]]): the same pinned window
+    * and semi-join, over the rows whose `id` and `value` are set, with
+    * `rep_id` the min id among rows of equal `key(value)`. Text keys on
+    * the md5 of its normalized form; a vector keys on its own value,
+    * so the collapse stays exact (no hash identity, no collision).
+    */
+  private[ops] def collapseOn(docs: DataFrame, id: String, value: String,
+      key: Column => Column = identity): (DataFrame, DataFrame) = {
     val members = Materialize.barrier(
-      docs.filter(col(id).isNotNull && col(text).isNotNull)
-        .select(col(id), md5(norm(col(text))).as("__fp"))
-        .select(col(id), min(col(id)).over(Window.partitionBy("__fp")).as("rep_id")))
+      docs.filter(col(id).isNotNull && col(value).isNotNull)
+        .select(col(id), key(col(value)).as("__key"))
+        .select(col(id), min(col(id)).over(Window.partitionBy("__key")).as("rep_id")))
     val repDocs = docs.join(members.filter(col(id) === col("rep_id")).select(col(id)),
       Seq(id), "left_semi")
     (members, repDocs)
@@ -414,7 +425,7 @@ object Dedup {
       // only selects existing values), so the self-join resolves; the
       // left join + coalesce keeps the row if the parent label lags a
       // round behind. Labels stay monotone: L[L[v]] <= L[v].
-      labels = propagated.select(col(id), col("cluster_id").as("__p"))
+      val next = propagated.select(col(id), col("cluster_id").as("__p"))
         .join(propagated.select(col(id).as("__p"),
           col("cluster_id").as("__pl")), Seq("__p"), "left")
         .select(col(id),
@@ -428,8 +439,11 @@ object Dedup {
       // agg job was half of it.
       // sum() over an empty frame is NULL — an empty pair graph (no
       // near-dups at all) is converged by definition, not an NPE
-      val (pinned, sumRow) = Materialize.barrierAgg(labels,
+      val (pinned, sumRow) = Materialize.barrierAgg(next,
         org.apache.spark.sql.functions.sum("cluster_id"))
+      // the previous round's pin is superseded: free its blocks now
+      // rather than at the next driver GC (round 0's labels are unpinned)
+      Materialize.release(labels)
       labels = pinned
       val sum = if (sumRow.isNullAt(0)) 0L else sumRow.getLong(0)
       converged = sumRow.isNullAt(0) || prevSum.contains(sum)

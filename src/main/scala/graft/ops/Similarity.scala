@@ -257,9 +257,9 @@ object Similarity {
     * small corpora (the oracle-checked regime) are unaffected: auto
     * never lowers planes below 4.
     */
-  /** Shared LSH granularity sizing (embeddingNearDups, the embedding
-    * index): explicit nPlanes/nTables pass through; auto mode
-    * (either <= 0) derives planes from the corpus size (bucket
+  /** LSH granularity sizing of the one vector index build
+    * ([[buildEmbeddingIndex]]): explicit nPlanes/nTables pass through;
+    * auto mode (either <= 0) derives planes from the corpus size (bucket
     * occupancy) and tables from a per-pair candidate-miss budget of
     * 1e-6 AT the threshold, tables hard-capped at 512 — tables grow as
     * 1/agree^planes, so at low thresholds an uncapped budget explodes
@@ -414,7 +414,11 @@ object Similarity {
       part
     }.reduce(_ unionByName _).distinct()
 
-  /** `verifyChunks` > 1 runs the candidate verify in that many
+  /** Self near-dup pairs: [[buildEmbeddingIndex]]'s three pinned
+    * frames (the exact-identity collapse's members, the representative
+    * vectors and their bucket frame) through the shared candidate →
+    * score-once → member-expansion tail, [[selfPairsExpanded]].
+    * `verifyChunks` > 1 runs the candidate verify in that many
     * sequential per-table-slice jobs (the [[chunkedBy]] bounded-spill
     * loop the incremental probe already uses) — the single-box valve
     * for corpus-scale self-dedup whose all-candidates join would
@@ -425,61 +429,8 @@ object Similarity {
   def embeddingNearDups(df: DataFrame, idCol: String, vecCol: String,
       nPlanes: Int, nTables: Int, threshold: Double,
       maxBucketSize: Int = Int.MaxValue, verifyChunks: Int = 1): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
-    // exact-identity collapse FIRST: byte-identical embeddings collide
-    // in every table's bucket, so a cluster of B identical vectors would
-    // put B²/2 candidate pairs in one bucket. Grouping directly on the
-    // vector VALUE (arrays are grouping keys — no hash identity, no
-    // collision risk) reduces the LSH input to one representative per
-    // distinct vector; identical-member pairs are reconstructed exactly
-    // afterwards (the cosine of equal arrays is the same float the
-    // uncollapsed path would compute).
-    val base = df.filter(col(idCol).isNotNull && col(vecCol).isNotNull)
-      .select(col(idCol).as("__id"), col(vecCol).as("__v"))
-    val reps = base.groupBy("__v").agg(min(col("__id")).as("rep_id"))
-    // pin the two shared collapse artifacts (r16, the repDupPairs
-    // precedent): the membership map is read four times by the member
-    // expansion and the rep-vector table three times by the vector
-    // fetch + self-sim legs — unpinned, each read re-ran the
-    // vector-value collapse groupBy over the raw corpus. Both frames
-    // are rep-/member-proportional and narrow (ids + one d-float
-    // vector).
-    val members = Materialize.barrier(base.join(reps, "__v").select(col("__id"), col("rep_id")))
-    val repVecs = Materialize.barrier(reps.select(col("rep_id").as("vid"), col("__v").as("vec")))
-    // recall budget: per-pair candidate-miss <= 1e-6 AT the threshold,
-    // tables hard-capped at 512 — tables grow as 1/agree^planes, so at
-    // low thresholds an uncapped budget explodes exponentially with the
-    // plane count. When the bucket-size-driven plane count would need
-    // more than 512 tables, planes are CLAMPED down to what the table
-    // budget affords (buckets run larger; the maxBucketSize anchor
-    // valve is the documented knob for that regime — auto mode is
-    // designed for dup-grade thresholds, where the clamp never binds).
-    val (planes, tables) =
-      lshGranularity(nPlanes, nTables, threshold, () => repVecs.count())
-    // explicit fan-out before the bucketing (r15 stage audit): the
-    // identity-collapse groupBy's output is SMALL IN BYTES (n_reps ×
-    // d floats), so AQE coalesces it to ~1 partition — and then the
-    // CPU-DENSE hash projection (tables × planes × d multiply-adds
-    // per vector) runs serially: one 3.5 s task owned 68% of
-    // dedup_embedding_cosine's gated wall at sf0.1, and at 100× the
-    // same byte-sized coalescing leaves ~2 tasks for ~10¹¹
-    // multiply-adds. A fixed-width round-robin exchange of the tiny
-    // rep frame (explicit numPartitions disables AQE coalescing)
-    // spreads the hashing across the cluster for ~1 MB of shuffle.
-    val fanOut = df.sparkSession.sparkContext.defaultParallelism
-    // the bucket frame feeds BOTH sides of the candidate self-join, and
-    // the alias-renamed sides defeat exchange reuse — unpinned, the
-    // tables × planes × d hash projection (the operator's dominant CPU,
-    // 21 s of task time in the r16 stage audit) ran twice. Pinned, it
-    // runs once; the frame is 3 longs per (rep, table) — the same data
-    // the join's own shuffle files would hold anyway.
-    val b = Materialize.barrier(
-      repVecs.repartition(fanOut).select(col("vid").as("rep_id"),
-        posexplode(lshTableBuckets(col("vec"), tables, planes))
-          .as(Seq("table_id", "bucket"))))
-    selfPairsExpanded(b,
-      repVecs.select(col("vid").as("rep_id"), col("vec")),
-      members,
+    val ix = buildEmbeddingIndex(df, idCol, vecCol, nPlanes, nTables, threshold)
+    selfPairsExpanded(ix.buckets, ix.repVecs, ix.members,
       threshold, maxBucketSize, verifyChunks)
   }
 
@@ -553,12 +504,30 @@ object Similarity {
     * bucket per distinct vector), rep vectors, and exact-identity
     * membership. All three are plain DataFrames a nightly job writes
     * to parquet (bucket frame bucketed by (table_id, bucket) at scale)
-    * and reloads; the corpus is never re-hashed for a new batch.
+    * and reloads; the corpus is never re-hashed for a new batch. As
+    * [[buildEmbeddingIndex]] returns them, all three are pinned.
     */
   final case class EmbeddingIndex(buckets: DataFrame, repVecs: DataFrame,
       members: DataFrame, nPlanes: Int, nTables: Int)
 
-  /** `nPlanes`/`nTables` <= 0 → auto granularity sized to THIS corpus
+  /** The one vector index build, behind [[embeddingNearDups]], the
+    * incremental probe's batch side and the nightly index. Three pins:
+    *  - `members(__id, rep_id)`: the exact-identity collapse, Dedup's
+    *    one collapse ([[Dedup.collapseExact]]'s window) keyed on the
+    *    vector value itself — arrays are partition keys, so no hash
+    *    identity and no collision risk. Identical vectors share EVERY
+    *    bucket, so collapsing to one rep keeps a B-identical cluster
+    *    from putting B²/2 candidates in each table; identical-member
+    *    pairs are reconstructed exactly afterwards (the cosine of equal
+    *    arrays is the same float the uncollapsed path would compute);
+    *  - `repVecs(rep_id, vec)`: the representatives' rows, read by the
+    *    granularity count, the bucketing and every vector fetch;
+    *  - `buckets(rep_id, table_id, bucket)`: read by both sides of a
+    *    candidate self-join, whose alias-renamed sides defeat exchange
+    *    reuse — unpinned, the tables × planes × d hash projection (the
+    *    operator's dominant CPU) ran once per side.
+    *
+    * `nPlanes`/`nTables` <= 0 → auto granularity sized to THIS corpus
     * and `threshold` (see [[lshGranularity]]) — the scale default:
     * pinned planes keep bucket occupancy (and candidate count) growing
     * with the corpus, the r6 quadratic, which the 10× smoke re-caught
@@ -568,23 +537,22 @@ object Similarity {
   def buildEmbeddingIndex(df: DataFrame, idCol: String, vecCol: String,
       nPlanes: Int, nTables: Int, threshold: Double = 0.8): EmbeddingIndex = {
     GraftFunctions.register(df.sparkSession)
-    // same exact-identity collapse as embeddingNearDups: identical
-    // vectors share EVERY bucket, so collapsing to one rep keeps a
-    // B-identical cluster from putting B² candidates in each table
-    val base = df.filter(col(idCol).isNotNull && col(vecCol).isNotNull)
-      .select(col(idCol).as("__id"), col(vecCol).as("__v"))
-    val reps = base.groupBy("__v").agg(min(col("__id")).as("rep_id"))
-    val members = base.join(reps, "__v").select(col("__id"), col("rep_id"))
-    val repVecs = reps.select(col("rep_id"), col("__v").as("vec"))
+    val (members, reps) = Dedup.collapseOn(
+      df.select(col(idCol).as("__id"), col(vecCol).as("vec")), "__id", "vec")
+    val repVecs = Materialize.barrier(reps.select(col("__id").as("rep_id"), col("vec")))
     val (planes, tables) =
       lshGranularity(nPlanes, nTables, threshold, () => repVecs.count())
-    // same explicit fan-out as embeddingNearDups (r15): the collapsed
-    // rep frame is byte-small, the hash projection is CPU-dense —
-    // don't let AQE serialize the index build's bucketing
+    // explicit fan-out before the bucketing (r15 stage audit): the rep
+    // frame is SMALL IN BYTES (n_reps × d floats), so it lands in ~1
+    // partition — and then the CPU-DENSE hash projection (tables ×
+    // planes × d multiply-adds per vector) runs serially: one 3.5 s
+    // task owned 68% of dedup_embedding_cosine's gated wall at sf0.1.
+    // A fixed-width round-robin exchange (explicit numPartitions
+    // disables AQE coalescing) spreads the hashing for ~1 MB of shuffle.
     val fanOut = df.sparkSession.sparkContext.defaultParallelism
-    val buckets = repVecs.repartition(fanOut).select(col("rep_id"),
+    val buckets = Materialize.barrier(repVecs.repartition(fanOut).select(col("rep_id"),
       posexplode(lshTableBuckets(col("vec"), tables, planes))
-        .as(Seq("table_id", "bucket")))
+        .as(Seq("table_id", "bucket"))))
     EmbeddingIndex(buckets, repVecs, members, planes, tables)
   }
 
@@ -595,8 +563,8 @@ object Similarity {
     * buckets against the INDEX's (the corpus side is never re-hashed),
     * each distinct rep pair is scored exactly once, and identity
     * members expand afterwards (cosine of byte-identical arrays is the
-    * rep's own score). New-vs-new runs the full
-    * [[embeddingNearDups]] pipeline on the batch alone. Recall is the
+    * rep's own score). New-vs-new runs the [[embeddingNearDups]] tail
+    * on the batch's own pinned index. Recall is the
     * same (1 − agree^planes)^tables bound per pair — the index stores
     * every table's buckets, so a probe meets exactly the candidates a
     * joint batch run would.
@@ -605,25 +573,21 @@ object Similarity {
       idCol: String, vecCol: String, threshold: Double,
       maxBucketSize: Int = Int.MaxValue, verifyChunks: Int = 1): DataFrame =
     incrementalVecCore(batch, index, idCol, vecCol, threshold,
-      pinBatch = false, maxBucketSize, verifyChunks)._1
+      maxBucketSize, verifyChunks)._1
 
   /** Shared probe core: (pairs touching the batch, the batch's own
     * index artifacts) — [[probeAndExtendVec]] reuses the artifacts so
     * the streaming loop never hashes a batch twice (the contract the
-    * text sibling [[Dedup]] `incrementalCore` documents). `pinBatch`
-    * is private to this object because its two callers differ: the
-    * probe-and-fold path pins the three batch frames through
-    * [[Materialize]], so the pair legs AND the extended index's union
-    * arm both read results instead of re-deriving the collapse +
-    * bucketing lineage; the probe-only path reads each frame once per
-    * pair leg and skips the three pin jobs.
+    * text sibling [[Dedup]] `incrementalCore` documents). The batch
+    * index is [[buildEmbeddingIndex]]'s, pinned the same way for both
+    * callers, so the pair legs (and the extended index's union arm)
+    * read its stored frames.
     * `maxBucketSize` caps the new-vs-new leg's candidate cells (the
     * cross leg's cells are already bounded by the batch side — only
     * batch reps explode against them).
     */
   private def incrementalVecCore(batch: DataFrame, index: EmbeddingIndex,
       idCol: String, vecCol: String, threshold: Double,
-      pinBatch: Boolean,
       maxBucketSize: Int = Int.MaxValue,
       verifyChunks: Int = 1): (DataFrame, EmbeddingIndex) = {
     // the index's granularity was sized (or pinned) for SOME threshold;
@@ -639,11 +603,7 @@ object Similarity {
         f"candidate-miss $miss%.2e — the index granularity was sized for a " +
         "higher threshold; rebuild with auto granularity at THIS threshold " +
         "or accept the reduced recall.")
-    val b0 = buildEmbeddingIndex(batch, idCol, vecCol, index.nPlanes, index.nTables)
-    val b = if (!pinBatch) b0
-      else EmbeddingIndex(Materialize.barrier(b0.buckets),
-        Materialize.barrier(b0.repVecs), Materialize.barrier(b0.members),
-        b0.nPlanes, b0.nTables)
+    val b = buildEmbeddingIndex(batch, idCol, vecCol, index.nPlanes, index.nTables)
     // the cross verify is the 100× spill wall (corpus×batch candidate
     // volume all in flight at once) — chunk it when asked; the INDEX
     // side carries the corpus-scale bucket frame, so both sides filter
@@ -689,7 +649,7 @@ object Similarity {
       idCol: String, vecCol: String, threshold: Double,
       maxBucketSize: Int = Int.MaxValue): (DataFrame, EmbeddingIndex) = {
     val (pairs, b) = incrementalVecCore(batch, index, idCol, vecCol,
-      threshold, pinBatch = true, maxBucketSize)
+      threshold, maxBucketSize)
     (pairs, EmbeddingIndex(index.buckets.unionByName(b.buckets),
       index.repVecs.unionByName(b.repVecs),
       index.members.unionByName(b.members), index.nPlanes, index.nTables))

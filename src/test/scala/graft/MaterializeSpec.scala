@@ -87,6 +87,18 @@ class MaterializeSpec extends SparkSpec {
       "release left the checkpointed RDD persisted")
   }
 
+  test("dupClusters keeps only its final round's pin") {
+    // a 40-node path takes several pointer-doubling rounds; each round
+    // pins its labels, and a superseded round's pin is released
+    val docs = (1L to 40L).toDF("id")
+    val pairs = (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val cl = graft.ops.Dedup.dupClusters(docs, "id", pairs)
+    val held = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(held.size <= 1, s"pins held after dupClusters: $held")
+    assert(cl.select("cluster_id").distinct().as[Long].collect().toSeq == Seq(1L))
+  }
+
   /** Jobs started while `body` runs, counted by [[Profile]]. */
   private def jobsOf(body: => Unit): Int = {
     val p = new Profile(spark.sparkContext)
