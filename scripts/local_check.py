@@ -6,7 +6,9 @@ values, columns sorted by name).
 Usage: local_check.py [sf_dir] [out_dir] [names]
 `names` is the comma-separated query list given to Verify as its third
 argument; only those names are checked. A named query with no output,
-or a name missing from oracle_sql.json, FAILs."""
+or a name missing from oracle_sql.json, FAILs.
+
+Exit status: 0 when every checked query is ok, 1 when any FAILs."""
 import sys, json, glob, hashlib
 import duckdb, pyarrow.parquet as pq
 import pandas as pd
@@ -85,3 +87,4 @@ for d in sorted(glob.glob(f"{out_dir}/*/")) if names is None else []:
     if n > 0: ok += 1
     else: fail += 1
 print(f"\n{ok} ok, {fail} fail")
+sys.exit(1 if fail else 0)

@@ -16,9 +16,13 @@ A pin's own frames (`graft.ops.Materialize...`) are skipped when
 naming the group, so a pin is named by the operator line that pinned;
 `[pin]` marks such a group. A job whose site has no `graft.ops` frame
 outside Materialize (the trace keeps four frames) is named by its last
-`graft.ops` frame, and a job with none by `(other)`.
+`graft.ops` frame. A job with none, such as every job of a streaming
+micro-batch (its call site is the query's `start`), is named by the
+innermost span open when it started (`materialize.parse`, `conveyor`,
+`apply.sink`, ...), and a job outside every span by `(other)`.
 """
 import json
+import os
 import sys
 
 
@@ -34,24 +38,45 @@ def union_ms(intervals):
     return total
 
 
-def frame_of(job):
+def innermost_span(job, spans, depth):
+    """The deepest span open when the job started, the later-opened one
+    on a tie (graftbench's own attribution); None outside every span."""
+    open_ = [s for s in spans if s["start_ms"] <= job["start_ms"] < s["end_ms"]]
+    if not open_:
+        return None
+    return max(open_, key=lambda s: (depth[s["id"]], s["start_ms"]))["span"]
+
+
+def frame_of(job, span):
     frames = [f.strip() for f in (job.get("site") or "").split("|")]
     ops = [f for f in frames if f.startswith("graft.ops.")]
     outside = [f for f in ops if not f.startswith("graft.ops.Materialize")]
-    name = (outside or ops[::-1] or ["(other)"])[0]
+    name = (outside or ops[::-1] or [span or "(other)"])[0]
     return name + (" [pin]" if job.get("pin") else "")
+
+
+def depths(spans):
+    parent = {s["id"]: s["parent"] for s in spans}
+    out = {}
+    for s in spans:
+        d, p = 0, s["parent"]
+        while p in parent:
+            d, p = d + 1, parent[p]
+        out[s["id"]] = d
+    return out
 
 
 def summarize(lines):
     spans = [r for r in lines if "span" in r]
     jobs = [r for r in lines if "job" in r]
+    depth = depths(spans)
     for sp in sorted(spans, key=lambda r: r["start_ms"]):
         if sp["span"] != "op" and not sp["span"].startswith("op."):
             continue
         inside = [j for j in jobs if sp["start_ms"] <= j["start_ms"] < sp["end_ms"]]
         groups = {}
         for j in inside:
-            groups.setdefault(frame_of(j), []).append(j)
+            groups.setdefault(frame_of(j, innermost_span(j, spans, depth)), []).append(j)
         by_frame = {
             k: {"jobs": len(v),
                 "ms": round(union_ms([(j["start_ms"], j["end_ms"]) for j in v]), 1),
@@ -75,8 +100,14 @@ def main(argv):
         sys.exit(__doc__)
     with open(argv[1]) as f:
         lines = [json.loads(l) for l in f if l.strip()]
-    for row in summarize(lines):
-        print(json.dumps(row))
+    try:
+        for row in summarize(lines):
+            print(json.dumps(row))
+        sys.stdout.flush()
+    except BrokenPipeError:
+        # the reader closed stdout (`| head`): stop quietly, with stdout
+        # on devnull so the exit flush does not raise again
+        os.dup2(os.open(os.devnull, os.O_WRONLY), sys.stdout.fileno())
 
 
 if __name__ == "__main__":

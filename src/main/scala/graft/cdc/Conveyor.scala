@@ -1,7 +1,9 @@
 package graft.cdc
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.ops.Materialize
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Conveyor-level acceptance plumbing: runtime apply-mode selection per
   * target schema plus checkpoint bootstrap, in one object.
@@ -22,12 +24,20 @@ import org.apache.spark.sql.functions._
   * everything and marks what lies beyond the frontier as speculative
   * (idempotent re-apply after a restart); immediate doesn't consult the
   * checkpoint at all. Outside immediate mode the group-resolved frontier
-  * is a SNAPSHOT: one row read from the proposal log once per bootstrap
-  * or refresh (the reference reading its checkpoint table), which both
-  * the mode decision and the acceptance gate then see. Acceptance reads
-  * that row as a one-row local relation, so no action on the accepted
-  * frame re-runs the frontier aggregate, and a proposal log that grows
-  * after the read cannot move the gate away from the mode it chose.
+  * is a SNAPSHOT: one value read from the proposal log once per
+  * bootstrap or refresh, in one job with no exchange (the reference
+  * reading its checkpoint table), which both the mode decision and the
+  * acceptance gate then see. Acceptance reads that value as a one-row
+  * local relation, so no action on the accepted frame re-runs the
+  * frontier aggregate, and a proposal log that grows after the read
+  * cannot move the gate away from the mode it chose.
+  *
+  * The streaming loop ([[Conveyors.foreachBatchAccept]]) accepts each
+  * micro-batch once: its sink gets the accepted frame pinned, and the
+  * pin is released when the sink returns, so a sink keeps nothing of
+  * that frame past the trigger unless it materializes it itself.
+  * `accept` itself stays lazy: a direct caller pins where it reads the
+  * result more than once.
   */
 object Conveyor {
 
@@ -110,10 +120,12 @@ object Conveyor {
       scala.collection.concurrent.TrieMap.empty[String, Conveyor]
 
     /** Shared bootstrap: the frontier from the proposal log, then —
-      * outside immediate mode — ONE read of the group-resolved row (the
-      * reference's checkpoint-table query; a one-row control-plane read,
-      * never a data-plane collect). That row sets the lag for mode
-      * selection against `current` and becomes the local relation
+      * outside immediate mode — ONE read of the group-resolved value
+      * (the reference's checkpoint-table query), one job with no
+      * exchange ([[Checkpoint.readGroupResolved]]: a control-plane read
+      * of at most one value per feed partition per task, never a
+      * data-plane collect). That value sets the lag for mode selection
+      * against `current` and becomes the one-row local relation
       * acceptance gates on.
       */
     private def bootstrap(schema: String, proposals: DataFrame,
@@ -123,17 +135,17 @@ object Conveyor {
       val resolved = Checkpoint.groupResolved(frontier)
       if (cfg.immediate) Conveyor(schema, Immediate, frontier, resolved)
       else {
-        val row = resolved.collect()(0)
+        val resolvedNanos = Checkpoint.readGroupResolved(proposals, partition, nanos)
         val dynamic = !cfg.bestEffortOnly && cfg.bestEffortWindowUs > 0L
         val lagUs =
           if (!dynamic) 0L
-          else if (row.isNullAt(0)) Long.MaxValue // empty checkpoint: way behind
-          else nowUs - row.getLong(0) / 1000L
+          else resolvedNanos.fold(Long.MaxValue)(n => nowUs - n / 1000L) // empty: way behind
         // a local relation, not a per-trigger literal: the value stays
         // out of generated code, so each new frontier reuses the
         // compiled plan
         val snapshot = proposals.sparkSession.createDataFrame(
-          java.util.List.of(row), resolved.schema)
+          java.util.List.of(Row(resolvedNanos.map(Long.box).orNull)),
+          StructType(Seq(StructField("resolved_nanos", LongType))))
         Conveyor(schema, selectMode(cfg, lagUs, current), frontier, snapshot)
       }
     }
@@ -176,6 +188,16 @@ object Conveyor {
       * the resolved range moves, so a conveyor that bootstrapped
       * best-effort during backfill flips to consistent when the
       * frontier catches up — per trigger, not once at bootstrap.
+      *
+      * The accepted batch is evaluated ONCE per trigger, as the
+      * reference's AcceptMultiBatch accepts once and then applies and
+      * dead-letters from the result: the sink gets a frame pinned with
+      * [[Materialize.barrier]] in every mode, so each of its actions
+      * reads the stored rows instead of re-running the gate and the
+      * reduce. The pin is released when the sink returns
+      * ([[Materialize.release]]): whatever the sink keeps past the
+      * trigger it must materialize inside the sink (pin it, collect
+      * it or write it), never hold the accepted frame lazily.
       */
     def foreachBatchAccept(schema: String,
         proposalsOf: (DataFrame, Long) => DataFrame,
@@ -185,7 +207,9 @@ object Conveyor {
       (batch: DataFrame, batchId: Long) => {
         val c = refresh(schema, proposalsOf(batch, batchId),
           partition, nanos, arrival, nowUs())
-        sink(c.accept(batch, keys, order, tsNanos), c.mode, batchId)
+        val accepted = Materialize.barrier(c.accept(batch, keys, order, tsNanos))
+        try sink(accepted, c.mode, batchId)
+        finally Materialize.release(accepted)
       }
   }
 }

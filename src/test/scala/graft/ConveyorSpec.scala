@@ -224,6 +224,126 @@ class ConveyorSpec extends SparkSpec {
     assert(reads.value == 3L)
   }
 
+  /** Runs `fn` as a MemoryStream's foreachBatch over three triggers of
+    * (k, eid, nanos) rows: two rows, then one, then one. */
+  private def threeTriggers(fn: (org.apache.spark.sql.DataFrame, Long) => Unit): Unit = {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[(Long, Long, Long)]
+    val q = in.toDF().toDF("k", "eid", "nanos")
+      .writeStream.foreachBatch((b: DataFrame, id: Long) => { fn(b, id); () })
+      .start()
+    try {
+      in.addData((1L, 1L, 100L), (2L, 2L, 200L)); q.processAllAvailable()
+      in.addData((1L, 3L, 300L)); q.processAllAvailable()
+      in.addData((3L, 4L, 400L)); q.processAllAvailable()
+    } finally q.stop()
+  }
+
+  /** A foreachBatchAccept whose proposal log puts the first trigger
+    * behind the window (best-effort) and the later ones caught up
+    * (consistent, every row under the frontier). */
+  private def acceptLoop(sink: (org.apache.spark.sql.DataFrame, Conveyor.Mode, Long) => Unit) =
+    new Conveyor.Conveyors(Config(bestEffortWindowUs = 1000L)).foreachBatchAccept("s",
+      proposalsOf = (_, batchId) =>
+        Seq((0L, if (batchId == 0L) 0L else 900000L, 1L)).toDF("part", "nanos", "arr"),
+      partition = col("part"), nanos = col("nanos"), arrival = col("arr"),
+      nowUs = () => 1000L,
+      keys = Seq("k"), order = struct(col("nanos"), col("eid")),
+      tsNanos = col("nanos"))(sink)
+
+  test("foreachBatchAccept evaluates the accepted batch once per trigger") {
+    // every batch row passes through a UDF that counts its evaluations
+    // (nondeterministic, so no rewrite duplicates or folds it)
+    val evals = spark.sparkContext.longAccumulator("conveyor_batch_evals")
+    val counted = udf { (n: Long) => evals.add(1L); n }.asNondeterministic()
+    val inSink = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
+    val perTrigger = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val fn = acceptLoop { (out, mode, _) =>
+      val before = evals.value
+      // the sink runs two actions on the accepted frame
+      val n = out.collect().length
+      out.agg(count(lit(1))).collect()
+      inSink += ((mode.name, n.toLong, evals.value - before))
+      ()
+    }
+    threeTriggers { (b, id) =>
+      val before = evals.value
+      fn(b.withColumn("nanos", counted(col("nanos"))), id)
+      perTrigger += evals.value - before
+    }
+    assert(inSink.map(_._1).toSeq == Seq("best_effort", "consistent", "consistent"))
+    assert(inSink.map(_._2).toSeq == Seq(2L, 1L, 1L))
+    // one evaluation per batch row per trigger, and none by the sink:
+    // its actions read the pinned frame
+    assert(perTrigger.toSeq == Seq(2L, 1L, 1L), perTrigger)
+    assert(inSink.forall(_._3 == 0L), inSink)
+  }
+
+  test("foreachBatchAccept leaves no pin behind after its triggers") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val duringSink = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val fn = acceptLoop { (out, _, _) =>
+      out.collect()
+      duringSink += (sc.getPersistentRDDs.keySet -- before).size
+      ()
+    }
+    threeTriggers(fn)
+    // the sink read a pinned frame each trigger, and each pin was
+    // released when its sink returned
+    assert(duringSink.size == 3 && duringSink.forall(_ >= 1), duringSink)
+    val held = sc.getPersistentRDDs.keySet -- before
+    assert(held.isEmpty, s"pins held after three triggers: $held")
+  }
+
+  /** Proposal logs with regressions, null nanos, a null partition key,
+    * floating-point keys that grouping normalizes (-0.0 and 0.0 are one
+    * partition) and no rows at all. */
+  private def frontierLogs = {
+    val regressions = Seq((0L, 100L, 1L), (0L, 50L, 2L), (0L, 300L, 3L),
+      (1L, 200L, 1L), (1L, 150L, 4L), (2L, 250L, 1L), (2L, 240L, 2L))
+      .toDF("part", "nanos", "arr")
+    val nulls = Seq[(Option[Long], Option[Long], Long)](
+      (Some(0L), Some(400L), 1L), (Some(0L), None, 2L),
+      (Some(1L), None, 1L), // a partition with no non-null proposal
+      (Some(2L), Some(500L), 1L), (Some(2L), Some(450L), 2L),
+      (None, Some(380L), 1L), (None, Some(130L), 2L))
+      .toDF("part", "nanos", "arr")
+    val floats = Seq((0.0, 100L, 1L), (-0.0, 300L, 2L), (1.0, 200L, 1L))
+      .toDF("part", "nanos", "arr")
+    Seq("regressions" -> regressions, "nulls" -> nulls,
+      "only nulls" -> nulls.filter(col("nanos").isNull),
+      "floats" -> floats, "empty" -> regressions.limit(0))
+  }
+
+  test("readGroupResolved equals groupResolved over advance") {
+    import graft.cdc.Checkpoint
+    val got = frontierLogs.map { case (name, log) =>
+      name -> Checkpoint.readGroupResolved(log, col("part"), col("nanos"))
+    }
+    val want = frontierLogs.map { case (name, log) =>
+      val r = Checkpoint.groupResolved(Checkpoint.advance(log, col("part"), col("nanos"),
+        col("arr"))).collect()(0)
+      name -> (if (r.isNullAt(0)) None else Some(r.getLong(0)))
+    }
+    assert(got == want)
+    assert(got.map(_._2) == Seq(Some(200L), Some(380L), None, Some(200L), None))
+  }
+
+  test("readGroupResolved is one job that writes no shuffle") {
+    import graft.cdc.Checkpoint
+    val p = new Profile(spark.sparkContext)
+    val counted = try frontierLogs.map { case (name, log) =>
+      p.drain(); p.reset()
+      Checkpoint.readGroupResolved(log, col("part"), col("nanos"))
+      p.drain()
+      (name, p.jobsSeen, p.shuffleWriteMb)
+    } finally p.detach()
+    assert(counted.forall { case (_, jobs, mb) => jobs == 1 && mb == 0.0 }, counted)
+  }
+
   test("a growing proposal log is gated at the frontier read at refresh") {
     import java.nio.file.Files
     import graft.cdc.Checkpoint
